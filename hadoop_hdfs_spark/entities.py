@@ -36,8 +36,6 @@ integer columns hash identically across engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -547,10 +545,10 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The driver may hand us a default-config session (200 shuffle
     # partitions — 6x task overhead for metadata-scale frames on a 32-core
-    # box). These are runtime-settable; a cluster deployment would size
-    # them to 2-3x total cores instead.
-    cores = os.cpu_count() or 8
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(cores, 64)))
+    # box). Size them to the session's own parallelism (local[N] or the
+    # cluster's executor cores), not the driver host's core count.
+    parallelism = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(parallelism, 64)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # Join-strategy defaults (guide §3.1), runtime-settable so a

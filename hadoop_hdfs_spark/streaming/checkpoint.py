@@ -132,7 +132,7 @@ def t2c_checkpoint_replay(e) -> DataFrame:
         from pyspark.sql import functions as F
 
         from ..sources import save_edits
-        from .drain import drain_partitions
+        from .drain import rows_per_batch, shuffle_partitions, state_partitions
         from .replay import load_latest_snapshot, replay_edits_stream
         from .staging import entities_sql_version, staged_dir
 
@@ -150,7 +150,8 @@ def t2c_checkpoint_replay(e) -> DataFrame:
         stage = staged_dir(sf_dir, f"t2c_edits_{code_ver}", build_stage)
         work = tempfile.mkdtemp(prefix="t2c_replay_")
         try:
-            with drain_partitions(spark):
+            n = state_partitions(spark, rows_per_batch(stage, 1))
+            with shuffle_partitions(spark, n):
                 q = replay_edits_stream(
                     spark,
                     stage,

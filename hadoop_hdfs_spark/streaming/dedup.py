@@ -76,13 +76,9 @@ def dedup_documents_stream(
 # contract is "at most one survivor per digest within the horizon", and
 # that is exactly what gets hash-checked.
 
-import itertools as _itertools
-
 from pyspark.sql import functions as _F
 
 from ..registry import register
-
-_T19_SEQ = _itertools.count(1)  # atomic under the GIL
 
 
 def _stage_documents(e) -> str:
@@ -134,7 +130,6 @@ def t19_stream_dedup(e):
 def _t19_run(e):
     spark = e["documents"].sparkSession
     stage = _stage_documents(e)
-    name = f"t19_stream_dedup_sink_{next(_T19_SEQ)}"
     src = spark.readStream.schema(
         spark.read.parquet(stage).schema
     ).parquet(stage)
@@ -147,18 +142,6 @@ def _t19_run(e):
     deduped = keyed.withWatermark(
         "ingest_ts", "30 days"
     ).dropDuplicatesWithinWatermark(["text_md5"])
-    from .drain import drain_partitions
+    from .drain import drain
 
-    with drain_partitions(spark):
-        q = (
-            deduped.select("text_md5")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    return drain(deduped.select("text_md5"), "append", "t19_stream_dedup")[0]

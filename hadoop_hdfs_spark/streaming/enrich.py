@@ -16,15 +16,11 @@ segment cardinality, independent of event volume.
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..entities import normalize_event_ts
 from ..registry import register
-
-_T20_SEQ = _itertools.count(1)  # atomic under the GIL
 
 
 @register(
@@ -55,7 +51,6 @@ def t20_stream_enrich(e) -> DataFrame:
     def build() -> DataFrame:
         spark = e["events"].sparkSession
         sf_dir = e["__sf_dir__"]
-        name = f"t20_stream_enrich_sink_{next(_T20_SEQ)}"
         src = normalize_event_ts(
             spark.readStream.schema(
                 spark.read.parquet(f"{sf_dir}/events.parquet").schema
@@ -78,29 +73,15 @@ def t20_stream_enrich(e) -> DataFrame:
             F.count("*").alias("n_events"),
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
-        from .drain import drain_partitions
+        from .drain import drain
 
-        with drain_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = (
-            spark.table(name)
-            .select(
-                F.unix_millis(F.col("window.start")).alias("bucket_start_ms"),
-                "mktsegment",
-                F.col("n_events").cast("long").alias("n_events"),
-                F.col("value_cents").cast("long").alias("value_cents"),
-            )
-            .localCheckpoint(eager=True)
+        sink, _ = drain(agg, "complete", "t20_stream_enrich")
+        return sink.select(
+            F.unix_millis(F.col("window.start")).alias("bucket_start_ms"),
+            "mktsegment",
+            F.col("n_events").cast("long").alias("n_events"),
+            F.col("value_cents").cast("long").alias("value_cents"),
         )
-        spark.catalog.dropTempView(name)
-        return out
 
     return eager_cache_thunk(e, "t20_enrich_result", build)
 

@@ -112,7 +112,6 @@ def open_close_pairs_stream(
 
 from ..registry import register
 
-_T18_SEQ = __import__("itertools").count(1)  # atomic under the GIL
 _T18_HORIZON_MS = _PAIR_HORIZON_S * 1000
 
 
@@ -176,7 +175,6 @@ def t18_stream_open_close(e) -> DataFrame:
     def build() -> DataFrame:
         spark = e["edits"].sparkSession
         stage = _stage_edits(e)
-        name = f"t18_stream_open_close_sink_{next(_T18_SEQ)}"
         src = spark.readStream.schema(
             spark.read.parquet(stage).schema
         ).parquet(stage)
@@ -218,20 +216,9 @@ def t18_stream_open_close(e) -> DataFrame:
                 "open_age_ms"
             ),
         )
-        from .drain import drain_partitions
+        from .drain import drain
 
-        with drain_partitions(spark):
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
+        return drain(joined, "append", "t18_stream_open_close")[0]
 
     return eager_cache_thunk(e, "t18_pairs_result", build)
 

@@ -63,8 +63,6 @@ operator.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -73,7 +71,6 @@ from ..entities import LEASE_HARD_MS, LEASE_SOFT_MS, NOW_MS
 from ..registry import eager_cache_thunk, register
 
 _T23_WINDOWS = 8
-_T23_SEQ = itertools.count(1)
 
 
 def _stage_renewals(e) -> str:
@@ -164,11 +161,10 @@ def t23_lease_expiry_stream(e) -> DataFrame:
     spark = e["leases"].sparkSession
 
     def build() -> DataFrame:
-        from .drain import drain_partitions
+        from .drain import drain
         from .timeouts import lease_event_stream
 
         stage = _stage_renewals(e)
-        name = f"t23_leases_sink_{next(_T23_SEQ)}"
         src = (
             spark.readStream.schema(
                 "holder string, path string, renewed_ms long"
@@ -180,20 +176,13 @@ def t23_lease_expiry_stream(e) -> DataFrame:
             "ts", F.timestamp_millis(F.col("renewed_ms"))
         ).withWatermark("ts", "0 seconds")
         out = lease_event_stream(renewals, LEASE_SOFT_MS, LEASE_HARD_MS)
-        with drain_partitions(spark):
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        sink = spark.table(name).filter(F.col("holder") != "__sentinel__")
-        per_lease = sink.groupBy("holder", "path", "last_renewed_ms").agg(
-            F.max(F.col("phase") == "hard_released").alias("hard_released")
+        sink, _ = drain(out, "append", "t23_leases")
+        per_lease = (
+            sink.filter(F.col("holder") != "__sentinel__")
+            .groupBy("holder", "path", "last_renewed_ms")
+            .agg(F.max(F.col("phase") == "hard_released").alias("hard_released"))
         )
-        res = per_lease.select(
+        return per_lease.select(
             "holder",
             "path",
             F.col("last_renewed_ms").cast("long").alias("last_renewed_ms"),
@@ -210,8 +199,6 @@ def t23_lease_expiry_stream(e) -> DataFrame:
             .otherwise(0)
             .cast("long")
             .alias("release_pass"),
-        ).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return res
+        )
 
     return eager_cache_thunk(e, "t23_leases", build)

@@ -44,8 +44,6 @@ restatement, not a different operator.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -54,7 +52,6 @@ from ..entities import HEARTBEAT_EXPIRY_MS, NOW_MS
 from ..registry import eager_cache_thunk, register
 
 _T22_WINDOWS = 8
-_T22_SEQ = itertools.count(1)
 
 
 def _stage_pings(e) -> str:
@@ -131,11 +128,10 @@ def t22_heartbeat_liveness_stream(e) -> DataFrame:
     spark = e["datanodes"].sparkSession
 
     def build() -> DataFrame:
-        from .drain import drain_partitions
+        from .drain import drain
         from .timeouts import heartbeat_event_stream
 
         stage = _stage_pings(e)
-        name = f"t22_liveness_sink_{next(_T22_SEQ)}"
         src = (
             spark.readStream.schema("datanode_id string, ping_ms long")
             .option("maxFilesPerTrigger", 1)
@@ -145,29 +141,14 @@ def t22_heartbeat_liveness_stream(e) -> DataFrame:
             "ts", F.timestamp_millis(F.col("ping_ms"))
         ).withWatermark("ts", "0 seconds")
         out = heartbeat_event_stream(pings, HEARTBEAT_EXPIRY_MS)
-        with drain_partitions(spark):
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        res = (
-            spark.table(name)
-            .filter(F.col("datanode_id") != "__sentinel__")
-            .select(
-                "datanode_id",
-                F.col("last_heartbeat_ms").cast("long").alias("last_heartbeat_ms"),
-                F.row_number()
-                .over(Window.orderBy("datanode_id"))
-                .cast("long")
-                .alias("removal_pass"),
-            )
-            .localCheckpoint(eager=True)
+        sink, _ = drain(out, "append", "t22_liveness")
+        return sink.filter(F.col("datanode_id") != "__sentinel__").select(
+            "datanode_id",
+            F.col("last_heartbeat_ms").cast("long").alias("last_heartbeat_ms"),
+            F.row_number()
+            .over(Window.orderBy("datanode_id"))
+            .cast("long")
+            .alias("removal_pass"),
         )
-        spark.catalog.dropTempView(name)
-        return res
 
     return eager_cache_thunk(e, "t22_liveness", build)

@@ -49,8 +49,6 @@ operator.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,8 +59,6 @@ from ..registry import eager_cache_thunk, register
 # segment keeps the same shape at every scale factor.
 _T21_TIMEOUT_STEPS = 4
 _T21_SPAN_STEPS = 8  # window span: confirms routinely cross a boundary
-
-_T21_SEQ = itertools.count(1)  # memory-sink names, atomic under the GIL
 
 _LAG_STEP_SQL = """
 SELECT CAST(FLOOR((MAX(ts_ms) - MIN(ts_ms)) / 32.0) AS BIGINT) + 1 AS step,
@@ -191,11 +187,10 @@ def t21_pending_timeout_stream(e) -> DataFrame:
     spark = e["repl_events"].sparkSession
 
     def build() -> DataFrame:
-        from .drain import drain_partitions
+        from .drain import drain
         from .timeouts import pending_replication_event_stream
 
         stage, timeout_ms = _stage_windows(e)
-        name = f"t21_pending_sink_{next(_T21_SEQ)}"
         src = (
             spark.readStream.schema(
                 "block_id long, event string, event_ms long, n_replicas long"
@@ -207,29 +202,12 @@ def t21_pending_timeout_stream(e) -> DataFrame:
             "ts", F.timestamp_millis(F.col("event_ms"))
         ).withWatermark("ts", "0 seconds")
         out = pending_replication_event_stream(ev, timeout_ms)
-        with drain_partitions(spark):
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        res = (
-            spark.table(name)
-            .filter(F.col("block_id") >= 0)
-            .select(
-                "block_id",
-                F.col("dispatched_ms").cast("long").alias("dispatched_ms"),
-                F.col("replicas_in_flight")
-                .cast("long")
-                .alias("replicas_in_flight"),
-                "timed_out",
-            )
-            .localCheckpoint(eager=True)
+        sink, _ = drain(out, "append", "t21_pending")
+        return sink.filter(F.col("block_id") >= 0).select(
+            "block_id",
+            F.col("dispatched_ms").cast("long").alias("dispatched_ms"),
+            F.col("replicas_in_flight").cast("long").alias("replicas_in_flight"),
+            "timed_out",
         )
-        spark.catalog.dropTempView(name)
-        return res
 
     return eager_cache_thunk(e, "t21_pending", build)

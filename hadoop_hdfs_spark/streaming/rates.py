@@ -72,9 +72,6 @@ def event_rates_stream(
     return q, table
 
 
-_CERTIFY_SEQ = __import__("itertools").count(1)  # atomic under the GIL
-
-
 @register(
     "t14_stream_rates",
     oracle=f"""
@@ -112,7 +109,6 @@ def _t14_run(e) -> DataFrame:
     ev_batch = e["events"]
     spark = ev_batch.sparkSession
     sf_dir = e["__sf_dir__"]
-    name = f"t14_stream_rates_sink_{next(_CERTIFY_SEQ)}"
     # the file-stream source requires a directory: stream the fixture dir
     # with a glob pinned to the events file
     src = normalize_event_ts(
@@ -134,30 +130,13 @@ def _t14_run(e) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
     )
-    from .drain import drain_partitions
+    from .drain import drain
 
-    with drain_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # Materialize the drained sink off the temp view, then DROP the view:
-    # repeated certification in a long-lived session must not accumulate
-    # one memory-sink table per invocation. The result is (minutes x
-    # types)-bounded, so the localCheckpoint pin is metadata-sized.
-    out = (
-        spark.table(name)
-        .select(
-            F.unix_millis(F.col("window.start")).alias("bucket_start_ms"),
-            "event_type",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("value_cents").cast("long").alias("value_cents"),
-        )
-        .localCheckpoint(eager=True)
+    # The result is (minutes x types)-bounded, so the pin is metadata-sized.
+    sink, _ = drain(agg, "complete", "t14_stream_rates")
+    return sink.select(
+        F.unix_millis(F.col("window.start")).alias("bucket_start_ms"),
+        "event_type",
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("value_cents").cast("long").alias("value_cents"),
     )
-    spark.catalog.dropTempView(name)
-    return out

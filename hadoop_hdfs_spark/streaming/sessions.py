@@ -139,9 +139,6 @@ def _stage_with_sentinel(sf_dir: str) -> str:
     )
 
 
-_T17_SEQ = __import__("itertools").count(1)  # atomic under the GIL
-
-
 @register(
     "t17_stream_sessions",
     oracle=f"""
@@ -212,7 +209,6 @@ def t17_stream_sessions(e) -> DataFrame:
         spark = ev_batch.sparkSession
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         stage = _stage_with_sentinel(e["__sf_dir__"])
-        name = f"t17_stream_sessions_sink_{next(_T17_SEQ)}"
         from ..entities import normalize_event_ts
 
         src = normalize_event_ts(
@@ -238,33 +234,18 @@ def t17_stream_sessions(e) -> DataFrame:
                 F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
             )
         )
-        from .drain import drain_partitions
+        from .drain import drain
 
-        with drain_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = (
-            spark.table(name)
-            .filter(F.col("user_id") >= 0)
-            .select(
-                "user_id",
-                F.unix_millis(F.col("session_window.start")).alias("session_start_ms"),
-                (F.unix_millis(F.col("session_window.end")) - SESSION_GAP_EVENTS_MS)
-                .cast("long")
-                .alias("session_end_ms"),
-                F.col("n_events").cast("long").alias("n_events"),
-                F.col("value_cents").cast("long").alias("value_cents"),
-            )
-            .localCheckpoint(eager=True)
+        sink, _ = drain(agg, "append", "t17_stream_sessions")
+        return sink.filter(F.col("user_id") >= 0).select(
+            "user_id",
+            F.unix_millis(F.col("session_window.start")).alias("session_start_ms"),
+            (F.unix_millis(F.col("session_window.end")) - SESSION_GAP_EVENTS_MS)
+            .cast("long")
+            .alias("session_end_ms"),
+            F.col("n_events").cast("long").alias("n_events"),
+            F.col("value_cents").cast("long").alias("value_cents"),
         )
-        spark.catalog.dropTempView(name)
-        return out
 
     return eager_cache_thunk(e, "t17_sessions_result", build)
 

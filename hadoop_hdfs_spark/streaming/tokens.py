@@ -47,15 +47,12 @@ token-universe bounded, exactly the map the reference holds in RAM.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..registry import eager_cache_thunk, register
 
 _T26_WINDOWS = 8
-_T26_SEQ = itertools.count(1)
 
 
 def _stage_token_events(e) -> str:
@@ -209,11 +206,10 @@ def t26_token_expiry_stream(e) -> DataFrame:
     spark = e["token_ops"].sparkSession
 
     def build() -> DataFrame:
-        from .drain import drain_partitions
+        from .drain import drain
         from .timeouts import token_expiry_event_stream
 
         stage = _stage_token_events(e)
-        name = f"t26_tokens_sink_{next(_T26_SEQ)}"
         src = (
             spark.readStream.schema(
                 "token_seq long, op string, ts_ms long, expiry_ms long, "
@@ -226,28 +222,13 @@ def t26_token_expiry_stream(e) -> DataFrame:
             "ts", F.timestamp_millis(F.col("ts_ms"))
         ).withWatermark("ts", "0 seconds")
         out = token_expiry_event_stream(events)
-        with drain_partitions(spark):
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        res = (
-            spark.table(name)
-            .filter(F.col("token_seq") >= 0)
-            .select(
-                F.col("token_seq").cast("long").alias("token_seq"),
-                "owner",
-                "status",
-                F.col("death_ms").cast("long").alias("death_ms"),
-                F.col("n_valid_renewals").cast("long").alias("n_valid_renewals"),
-            )
-            .localCheckpoint(eager=True)
+        sink, _ = drain(out, "append", "t26_tokens")
+        return sink.filter(F.col("token_seq") >= 0).select(
+            F.col("token_seq").cast("long").alias("token_seq"),
+            "owner",
+            "status",
+            F.col("death_ms").cast("long").alias("death_ms"),
+            F.col("n_valid_renewals").cast("long").alias("n_valid_renewals"),
         )
-        spark.catalog.dropTempView(name)
-        return res
 
     return eager_cache_thunk(e, "t26_tokens", build)

@@ -215,12 +215,13 @@ def test_t23_event_time_leases_matches_batch_t4(spark, sf_dir):
     assert all(r.release_pass == 0 for r in rows if not r.hard_released)
 
 
-def test_t23_lease_ladder_mid_stream_rungs(spark, tmp_path):
+def test_t23_lease_ladder_mid_stream_rungs(spark, tmp_path, monkeypatch):
     """The two-phase ladder on a tiny synthetic stream: a lease whose soft
     pin is crossed mid-stream (watermark between the rungs) emits the soft
     row with state retained, then the hard row once the watermark passes
     the second pin — and a renewal resets the ladder (no firing for the
-    renewed lease until its NEW pin is crossed)."""
+    renewed lease until its NEW pin is crossed). The same relation drains
+    at 1 state partition and at defaultParallelism."""
     import os as _os
 
     import pyarrow as pa
@@ -228,7 +229,7 @@ def test_t23_lease_ladder_mid_stream_rungs(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hadoop_hdfs_spark.streaming.drain import drain_partitions
+    from hadoop_hdfs_spark.streaming import drain as D
     from hadoop_hdfs_spark.streaming.timeouts import lease_event_stream
 
     # soft 100ms, hard 1000ms, times offset from epoch 0 (a watermark of 0
@@ -266,26 +267,25 @@ def test_t23_lease_ladder_mid_stream_rungs(spark, tmp_path):
         "ts", F.timestamp_millis(F.col("renewed_ms"))
     ).withWatermark("ts", "0 seconds")
     out = lease_event_stream(renewals, soft_ms=100, hard_ms=1000)
-    with drain_partitions(spark):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("t23_ladder_sink")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emitted = {
-        (r.holder, r.phase, r.last_renewed_ms)
-        for r in spark.sql("SELECT * FROM t23_ladder_sink").collect()
-        if r.holder != "__sentinel__"
-    }
-    spark.catalog.dropTempView("t23_ladder_sink")
-    assert emitted == {
+
+    def emitted(partitions: int) -> set:
+        monkeypatch.setattr(D, "state_partitions", lambda _s, _r: partitions)
+        sink, progress = D.drain(out, "append", "t23_ladder")
+        # maxFilesPerTrigger=1: one data micro-batch per staged file
+        assert sum(p.numInputRows > 0 for p in progress) == len(files)
+        return {
+            (r.holder, r.phase, r.last_renewed_ms)
+            for r in sink.collect()
+            if r.holder != "__sentinel__"
+        }
+
+    expected = {
         ("A", "soft_preemptable", B0 + 0),
         ("A", "hard_released", B0 + 0),
         ("B", "soft_preemptable", B0 + 500),  # renewed: ladder reset, hard not crossed
     }
+    assert emitted(1) == expected
+    assert emitted(spark.sparkContext.defaultParallelism) == expected
 
 
 def test_t26_token_monitor_sequential_authority(spark, tmp_path):
@@ -311,7 +311,7 @@ def test_t26_token_monitor_sequential_authority(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hadoop_hdfs_spark.streaming.drain import drain_partitions
+    from hadoop_hdfs_spark.streaming.drain import drain
     from hadoop_hdfs_spark.streaming.timeouts import token_expiry_event_stream
 
     GET, REN, CAN = (
@@ -375,21 +375,12 @@ def test_t26_token_monitor_sequential_authority(spark, tmp_path):
         "ts", F.timestamp_millis(F.col("ts_ms"))
     ).withWatermark("ts", "0 seconds")
     out = token_expiry_event_stream(events)
-    with drain_partitions(spark):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("t26_ladder_sink")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink, _ = drain(out, "append", "t26_ladder")
     emitted = {
         r.token_seq: (r.status, r.death_ms, r.n_valid_renewals)
-        for r in spark.sql("SELECT * FROM t26_ladder_sink").collect()
+        for r in sink.collect()
         if r.token_seq >= 0
     }
-    spark.catalog.dropTempView("t26_ladder_sink")
     assert 1 not in emitted  # renewed past the horizon: alive, no emission
     assert emitted[2] == ("expired", B0 + 400, 0)
     assert emitted[3] == ("expired", B0 + 300, 0)  # late renewal ignored
@@ -419,7 +410,6 @@ def test_t26_output_invariant_to_stream_slicing(spark, sf_dir, monkeypatch):
     from hadoop_hdfs_spark.registry import _CACHED
 
     e = registry._entities(spark, sf_dir)
-    monkeypatch.setattr(tok, "_T26_SEQ", iter(range(1000, 2000)))
     app = spark.sparkContext.applicationId
     for k in [k for k in _CACHED if k[0] == app and k[2] == "t26_tokens"]:
         _CACHED.pop(k)
