@@ -16,19 +16,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import register
+
 
 def dedup_documents_stream(
     spark: SparkSession,
     documents_parquet_dir: str,
     watermark: str = "1 hour",
     max_files_per_trigger: int | None = None,
-):
+) -> DataFrame:
     """Stream (doc_id, text_md5) of first-seen documents from a parquet dir.
 
     Event time is the ingest timestamp carried by the fixture's ``doc_id``
     (one doc per second from the epoch — deterministic and monotone, the
-    arrival-order analog). Returns ``(query, table)`` as the other
-    streaming helpers do (availableNow trigger + memory sink).
+    arrival-order analog). Returns the unstarted streaming frame; drain it
+    in append mode (``drain(dedup_documents_stream(...), "append", name)``).
     """
     schema = spark.read.parquet(documents_parquet_dir).schema
     reader = spark.readStream.schema(schema)
@@ -46,20 +48,7 @@ def dedup_documents_stream(
     deduped = keyed.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["text_md5"]
     )
-    name = "dedup_documents_sink"
-    q = (
-        deduped.select("doc_id", "text_md5")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def table() -> DataFrame:
-        return spark.table(name)
-
-    return q, table
+    return deduped.select("doc_id", "text_md5")
 
 
 # ---------------------------------------------------------------------------
@@ -75,10 +64,6 @@ def dedup_documents_stream(
 # to the batch pass (d_exact_dedup pins keeper = min doc_id); the stream's
 # contract is "at most one survivor per digest within the horizon", and
 # that is exactly what gets hash-checked.
-
-from pyspark.sql import functions as _F
-
-from ..registry import register
 
 
 def _stage_documents(e) -> str:
@@ -128,20 +113,10 @@ def t19_stream_dedup(e):
 
 
 def _t19_run(e):
-    spark = e["documents"].sparkSession
-    stage = _stage_documents(e)
-    src = spark.readStream.schema(
-        spark.read.parquet(stage).schema
-    ).parquet(stage)
-    keyed = src.select(
-        _F.md5("text").alias("text_md5"),
-        # +1 day: a row landing exactly ON the initial watermark would be
-        # dropped as late before its digest reaches state
-        _F.timestamp_seconds(_F.col("doc_id") + 86400).alias("ingest_ts"),
-    )
-    deduped = keyed.withWatermark(
-        "ingest_ts", "30 days"
-    ).dropDuplicatesWithinWatermark(["text_md5"])
     from .drain import drain
 
+    stage = _stage_documents(e)
+    deduped = dedup_documents_stream(
+        e["documents"].sparkSession, stage, watermark="30 days"
+    )
     return drain(deduped.select("text_md5"), "append", "t19_stream_dedup")[0]

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..entities import normalize_event_ts
 from ..registry import register
 
 
@@ -49,15 +48,9 @@ def t20_stream_enrich(e) -> DataFrame:
     from ..registry import eager_cache_thunk
 
     def build() -> DataFrame:
-        spark = e["events"].sparkSession
-        sf_dir = e["__sf_dir__"]
-        src = normalize_event_ts(
-            spark.readStream.schema(
-                spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            )
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+        from .rates import fixture_events_stream
+
+        src = fixture_events_stream(e)
         dim = e["customer"].select(
             F.col("c_custkey").alias("user_id"), "c_mktsegment"
         )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import eager_cache_thunk, register
+
 # Pairing horizon: one day — the abandoned-file sweep window (an OP_ADD
 # with no OP_CLOSE inside it is a lease-recovery candidate, the
 # LeaseManager.Monitor sweep generalized to event time). The lease hard
@@ -29,13 +31,14 @@ def open_close_pairs_stream(
     edits_parquet_dir: str,
     watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
-):
+) -> DataFrame:
     """Stream (path, open_txid, close_txid, open_age_ms) pairs.
 
     Inner join: a pair is emitted when both sides have arrived; the
     event-time bound (close within the sweep horizon of its open) plus
     the watermarks let Spark evict adds older than the horizon. Returns
-    ``(query, table)`` like the other streaming helpers.
+    the unstarted streaming frame; drain it in append mode
+    (``drain(open_close_pairs_stream(...), "append", name)``).
     """
     schema = spark.read.parquet(edits_parquet_dir).schema
     reader = spark.readStream.schema(schema)
@@ -63,7 +66,7 @@ def open_close_pairs_stream(
         )
         .withWatermark("c_ts", watermark)
     )
-    joined = closes.join(
+    return closes.join(
         adds,
         F.expr(
             f"""
@@ -80,19 +83,6 @@ def open_close_pairs_stream(
             F.unix_millis(F.col("c_ts")) - F.unix_millis(F.col("a_ts"))
         ).alias("open_age_ms"),
     )
-    name = "open_close_pairs_sink"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def table() -> DataFrame:
-        return spark.table(name)
-
-    return q, table
 
 
 # ---------------------------------------------------------------------------
@@ -108,9 +98,6 @@ def open_close_pairs_stream(
 # watermark is set far past the fixture horizon, so no pair can be lost to
 # eviction; the join's event-time bound still declares the state-cleanup
 # contract a production run relies on.
-
-
-from ..registry import register
 
 _T18_HORIZON_MS = _PAIR_HORIZON_S * 1000
 
@@ -170,56 +157,12 @@ JOIN adds a ON a.path = c.path
     "deterministic; production would let eviction run continuously.",
 )
 def t18_stream_open_close(e) -> DataFrame:
-    from ..registry import eager_cache_thunk
-
     def build() -> DataFrame:
-        spark = e["edits"].sparkSession
-        stage = _stage_edits(e)
-        src = spark.readStream.schema(
-            spark.read.parquet(stage).schema
-        ).parquet(stage)
-        ev = src.select(
-            "txid", "op", "path", F.timestamp_millis(F.col("ts_ms")).alias("ts")
-        )
-        adds = (
-            ev.filter(F.col("op") == "OP_ADD")
-            .select(
-                F.col("path").alias("a_path"),
-                F.col("txid").alias("open_txid"),
-                F.col("ts").alias("a_ts"),
-            )
-            .withWatermark("a_ts", "30 days")
-        )
-        closes = (
-            ev.filter(F.col("op") == "OP_CLOSE")
-            .select(
-                F.col("path").alias("c_path"),
-                F.col("txid").alias("close_txid"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "30 days")
-        )
-        joined = closes.join(
-            adds,
-            F.expr(
-                f"""
-                c_path = a_path AND
-                a_ts <= c_ts AND
-                a_ts >= c_ts - INTERVAL {_PAIR_HORIZON_S} SECONDS
-                """
-            ),
-        ).select(
-            F.col("c_path").alias("path"),
-            "open_txid",
-            "close_txid",
-            (F.unix_millis(F.col("c_ts")) - F.unix_millis(F.col("a_ts"))).alias(
-                "open_age_ms"
-            ),
-        )
         from .drain import drain
 
-        return drain(joined, "append", "t18_stream_open_close")[0]
+        pairs = open_close_pairs_stream(
+            e["edits"].sparkSession, _stage_edits(e), watermark="30 days"
+        )
+        return drain(pairs, "append", "t18_stream_open_close")[0]
 
     return eager_cache_thunk(e, "t18_pairs_result", build)
-
-

@@ -73,58 +73,6 @@ from ..registry import eager_cache_thunk, register
 _T23_WINDOWS = 8
 
 
-def _stage_renewals(e) -> str:
-    """Stage ``lease_events`` as one parquet file per time window plus the
-    NOW_MS sentinel, mtime-ordered (the t21/t22 discipline); keyed on
-    fixture content AND a code-version tag so entity or constant edits
-    invalidate the stage."""
-    import hashlib
-
-    import pyarrow as pa
-
-    from ..entities import ENTITY_SQL
-    from .staging import (
-        entities_sql_version,
-        staged_dir,
-        write_windowed_stage,
-    )
-
-    sf_dir = str(e["__sf_dir__"])
-    pdf = (
-        e["lease_events"]
-        .select("holder", "path", "renewed_ms")
-        .toPandas()
-        .sort_values(["renewed_ms", "holder", "path"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    tmin, tmax = int(pdf["renewed_ms"].min()), int(pdf["renewed_ms"].max())
-    span = (tmax - tmin) // _T23_WINDOWS + 1
-    batch = (pdf["renewed_ms"].astype("int64") - tmin) // span
-
-    code_ver = hashlib.md5(
-        (
-            ENTITY_SQL["lease_events"]
-            + f"|{_T23_WINDOWS}|{NOW_MS}|{LEASE_SOFT_MS}|{LEASE_HARD_MS}"
-            + f"|{entities_sql_version()}"
-        ).encode()
-    ).hexdigest()[:6]
-
-    schema = pa.schema(
-        [
-            ("holder", pa.string()),
-            ("path", pa.string()),
-            ("renewed_ms", pa.int64()),
-        ]
-    )
-
-    sentinel = {"holder": "__sentinel__", "path": "", "renewed_ms": NOW_MS}
-    return staged_dir(
-        sf_dir,
-        f"t23_leases_{code_ver}",
-        lambda stage: write_windowed_stage(stage, pdf, schema, batch, sentinel),
-    )
-
-
 @register(
     "t23_lease_expiry_stream",
     oracle=f"""
@@ -158,23 +106,21 @@ FROM (
     "hard release evicts the cell.",
 )
 def t23_lease_expiry_stream(e) -> DataFrame:
-    spark = e["leases"].sparkSession
-
     def build() -> DataFrame:
         from .drain import drain
+        from .staging import even_windows, windowed_stream
         from .timeouts import lease_event_stream
 
-        stage = _stage_renewals(e)
-        src = (
-            spark.readStream.schema(
-                "holder string, path string, renewed_ms long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+        renewals, _ = windowed_stream(
+            e,
+            "t23_leases",
+            e["lease_events"],
+            "holder string, path string, renewed_ms long",
+            order=["renewed_ms", "holder", "path"],
+            layout=even_windows(_T23_WINDOWS, NOW_MS),
+            sentinel={"holder": "__sentinel__", "path": ""},
+            version=f"{_T23_WINDOWS}|{NOW_MS}",
         )
-        renewals = src.withColumn(
-            "ts", F.timestamp_millis(F.col("renewed_ms"))
-        ).withWatermark("ts", "0 seconds")
         out = lease_event_stream(renewals, LEASE_SOFT_MS, LEASE_HARD_MS)
         sink, _ = drain(out, "append", "t23_leases")
         per_lease = (

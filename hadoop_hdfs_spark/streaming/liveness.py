@@ -54,52 +54,6 @@ from ..registry import eager_cache_thunk, register
 _T22_WINDOWS = 8
 
 
-def _stage_pings(e) -> str:
-    """Stage ``hb_events`` as one parquet file per time window plus the
-    NOW_MS sentinel, mtime-ordered (the t21/pending.py discipline); keyed
-    on fixture content AND a code-version tag so entity or constant edits
-    invalidate the stage."""
-    import hashlib
-
-    import pyarrow as pa
-
-    from ..entities import ENTITY_SQL
-    from .staging import (
-        entities_sql_version,
-        staged_dir,
-        write_windowed_stage,
-    )
-
-    sf_dir = str(e["__sf_dir__"])
-    pdf = (
-        e["hb_events"]
-        .select("datanode_id", "ping_ms")
-        .toPandas()
-        .sort_values(["ping_ms", "datanode_id"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    tmin, tmax = int(pdf["ping_ms"].min()), int(pdf["ping_ms"].max())
-    span = (tmax - tmin) // _T22_WINDOWS + 1
-    batch = (pdf["ping_ms"].astype("int64") - tmin) // span
-
-    code_ver = hashlib.md5(
-        (
-            ENTITY_SQL["hb_events"]
-            + f"|{_T22_WINDOWS}|{NOW_MS}|{HEARTBEAT_EXPIRY_MS}"
-            + f"|{entities_sql_version()}"
-        ).encode()
-    ).hexdigest()[:6]
-
-    schema = pa.schema([("datanode_id", pa.string()), ("ping_ms", pa.int64())])
-
-    sentinel = {"datanode_id": "__sentinel__", "ping_ms": NOW_MS}
-    return staged_dir(
-        sf_dir,
-        f"t22_liveness_{code_ver}",
-        lambda stage: write_windowed_stage(stage, pdf, schema, batch, sentinel),
-    )
-
-
 @register(
     "t22_heartbeat_liveness_stream",
     oracle=f"""
@@ -125,21 +79,21 @@ WHERE {NOW_MS} - last_heartbeat_ms > {HEARTBEAT_EXPIRY_MS}
     "per-batch shuffle is one ping window; death evicts the cell.",
 )
 def t22_heartbeat_liveness_stream(e) -> DataFrame:
-    spark = e["datanodes"].sparkSession
-
     def build() -> DataFrame:
         from .drain import drain
+        from .staging import even_windows, windowed_stream
         from .timeouts import heartbeat_event_stream
 
-        stage = _stage_pings(e)
-        src = (
-            spark.readStream.schema("datanode_id string, ping_ms long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+        pings, _ = windowed_stream(
+            e,
+            "t22_liveness",
+            e["hb_events"],
+            "datanode_id string, ping_ms long",
+            order=["ping_ms", "datanode_id"],
+            layout=even_windows(_T22_WINDOWS, NOW_MS),
+            sentinel={"datanode_id": "__sentinel__"},
+            version=f"{_T22_WINDOWS}|{NOW_MS}",
         )
-        pings = src.withColumn(
-            "ts", F.timestamp_millis(F.col("ping_ms"))
-        ).withWatermark("ts", "0 seconds")
         out = heartbeat_event_stream(pings, HEARTBEAT_EXPIRY_MS)
         sink, _ = drain(out, "append", "t22_liveness")
         return sink.filter(F.col("datanode_id") != "__sentinel__").select(

@@ -67,74 +67,17 @@ FROM edits WHERE op = 'OP_ADD'
 """
 
 
-def _stage_windows(e) -> tuple[str, int]:
-    """Stage ``repl_events`` as one parquet file per time window (plus the
-    watermark sentinel), returning (stage_dir, timeout_ms).
-
-    Files are written in window order with strictly increasing mtimes so
-    the file stream source (which orders by modification time) replays
-    them as deterministic micro-batches. Keyed on fixture content AND a
-    code-version tag (the hftp lesson, ADVICE r6): an edit to the entity
-    SQL or this module's constants must invalidate the stage.
-    """
-    import hashlib
-
-    import pyarrow as pa
-
-    from ..entities import ENTITY_SQL
-    from .staging import (
-        entities_sql_version,
-        staged_dir,
-        write_windowed_stage,
-    )
-
-    sf_dir = str(e["__sf_dir__"])
-    pdf = (
-        e["repl_events"]
-        .select("block_id", "event", "event_ms", "n_replicas")
-        .toPandas()
-        .sort_values(["event_ms", "block_id", "event"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    disp = pdf[pdf["event"] == "dispatch"]["event_ms"]
-    tmin, tmax_d = int(disp.min()), int(disp.max())
-    step = (tmax_d - tmin) // 32 + 1
+def _layout(pdf, t):
+    """Windows of _T21_SPAN_STEPS lag steps from the first dispatch, the
+    lag step taken from the dispatch rows as the oracle's ``lagstep``
+    takes it from the edits; the sentinel lands one span past the tail.
+    The stage keeps the timeout (_T21_TIMEOUT_STEPS lag steps)."""
+    disp = t[pdf["event"] == "dispatch"]
+    tmin = int(disp.min())
+    step = (int(disp.max()) - tmin) // 32 + 1
     span = _T21_SPAN_STEPS * step
-    timeout_ms = _T21_TIMEOUT_STEPS * step
-    batch = (pdf["event_ms"].astype("int64") - tmin) // span
-    sentinel_ms = int(pdf["event_ms"].max()) + span
-
-    code_ver = hashlib.md5(
-        (
-            ENTITY_SQL["repl_events"]
-            + f"|{_T21_TIMEOUT_STEPS}|{_T21_SPAN_STEPS}"
-            + f"|{entities_sql_version()}"
-        ).encode()
-    ).hexdigest()[:6]
-
-    schema = pa.schema(
-        [
-            ("block_id", pa.int64()),
-            ("event", pa.string()),
-            ("event_ms", pa.int64()),
-            ("n_replicas", pa.int64()),
-        ]
-    )
-
-    sentinel = {
-        "block_id": -1,
-        "event": "dispatch",
-        "event_ms": sentinel_ms,
-        "n_replicas": 0,
-    }
-    return (
-        staged_dir(
-            sf_dir,
-            f"t21_pending_{code_ver}",
-            lambda stage: write_windowed_stage(stage, pdf, schema, batch, sentinel),
-        ),
-        timeout_ms,
-    )
+    meta = {"timeout_ms": _T21_TIMEOUT_STEPS * step}
+    return tmin, span, int(t.max()) + span, meta
 
 
 @register(
@@ -184,24 +127,22 @@ FROM j WHERE t_c IS NULL OR r_d > 1
     "per-batch shuffle is one window of the changelog keyed by block.",
 )
 def t21_pending_timeout_stream(e) -> DataFrame:
-    spark = e["repl_events"].sparkSession
-
     def build() -> DataFrame:
         from .drain import drain
+        from .staging import windowed_stream
         from .timeouts import pending_replication_event_stream
 
-        stage, timeout_ms = _stage_windows(e)
-        src = (
-            spark.readStream.schema(
-                "block_id long, event string, event_ms long, n_replicas long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+        ev, meta = windowed_stream(
+            e,
+            "t21_pending",
+            e["repl_events"],
+            "block_id long, event string, event_ms long, n_replicas long",
+            order=["event_ms", "block_id", "event"],
+            layout=_layout,
+            sentinel={"block_id": -1, "event": "dispatch", "n_replicas": 0},
+            version=f"{_T21_TIMEOUT_STEPS}|{_T21_SPAN_STEPS}",
         )
-        ev = src.withColumn(
-            "ts", F.timestamp_millis(F.col("event_ms"))
-        ).withWatermark("ts", "0 seconds")
-        out = pending_replication_event_stream(ev, timeout_ms)
+        out = pending_replication_event_stream(ev, meta["timeout_ms"])
         sink, _ = drain(out, "append", "t21_pending")
         return sink.filter(F.col("block_id") >= 0).select(
             "block_id",

@@ -29,14 +29,14 @@ def event_rates_stream(
     events_parquet_dir: str,
     watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
-):
+) -> DataFrame:
     """Stream per-minute (event_type, n_events, value_cents) aggregates.
 
-    Returns ``(query, table)``: ``query`` drains the directory under an
-    availableNow trigger; ``table()`` reads the append-mode memory sink.
-    Append emits a window exactly once, when the watermark passes its end —
-    windows still open within the watermark delay of the stream tail stay
-    in state (same contract as ``edit_sessions_stream``).
+    Returns the unstarted streaming frame; drain it in append mode
+    (``drain(event_rates_stream(...), "append", name)``). Append emits a
+    window exactly once, when the watermark passes its end — windows
+    still open within the watermark delay of the stream tail stay in
+    state (same contract as ``edit_sessions_stream``).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(events_parquet_dir).schema
@@ -49,7 +49,7 @@ def event_rates_stream(
         "event_type",
         "value",
     )
-    agg = (
+    return (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 minute"), "event_type")
         .agg(
@@ -57,19 +57,21 @@ def event_rates_stream(
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
     )
-    name = "event_rates_sink"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+
+
+def fixture_events_stream(e) -> DataFrame:
+    """The fixture's ``events.parquet`` as a file stream (t14, t20), with
+    ``ts`` normalized; the file-stream source requires a directory, so it
+    streams the fixture dir with a glob pinned to the events file."""
+    spark = e["events"].sparkSession
+    sf_dir = e["__sf_dir__"]
+    return normalize_event_ts(
+        spark.readStream.schema(
+            spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        )
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-
-    def table() -> DataFrame:
-        return spark.table(name)
-
-    return q, table
 
 
 @register(
@@ -106,18 +108,7 @@ def t14_stream_rates(e) -> DataFrame:
 
 
 def _t14_run(e) -> DataFrame:
-    ev_batch = e["events"]
-    spark = ev_batch.sparkSession
-    sf_dir = e["__sf_dir__"]
-    # the file-stream source requires a directory: stream the fixture dir
-    # with a glob pinned to the events file
-    src = normalize_event_ts(
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = fixture_events_stream(e)
     agg = (
         src.select(
             F.timestamp_millis(F.expr("ts div 1000000")).alias("ts"),

@@ -974,29 +974,16 @@ def replay_edits_stream(
     )
 
 
-def edits_opcode_stream_stats(spark: SparkSession, edits_parquet_dir: str):
-    """A6 as a streaming aggregation (StatisticsEditsVisitor, complete mode):
-    returns (query, get_table) where get_table() reads the in-memory sink."""
-    stream = (
+def edits_opcode_stream_stats(
+    spark: SparkSession, edits_parquet_dir: str
+) -> DataFrame:
+    """A6 as a streaming aggregation (StatisticsEditsVisitor): returns the
+    unstarted per-opcode count frame; drain it in complete mode
+    (``drain(edits_opcode_stream_stats(...), "complete", name)``)."""
+    return (
         spark.readStream.schema(EDITS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(edits_parquet_dir)
+        .groupBy("op")
+        .count()
     )
-    import hashlib
-
-    # memory-sink table names are session-global: a fixed name would make
-    # two concurrent invocations (two monitored edits dirs in one session)
-    # collide on registration; key the name by the source directory
-    name = (
-        "edits_opcode_stats_"
-        + hashlib.md5(edits_parquet_dir.encode()).hexdigest()[:8]
-    )
-    agg = stream.groupBy("op").count()
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: spark.table(name)

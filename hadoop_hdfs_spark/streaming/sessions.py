@@ -14,6 +14,10 @@ the batch query's ``ts_ms - lag(ts_ms) > GAP`` condition.
 
 from __future__ import annotations
 
+import os
+import shutil
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,12 +32,11 @@ def edit_sessions_stream(
     gap_ms: int = SESSION_GAP_MS,
     watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
-):
+) -> DataFrame:
     """Stream (client, session_window, ops) from an edits parquet directory.
 
-    Returns ``(query, table)`` where ``query`` is the started streaming
-    query (availableNow trigger — drains the directory then stops) and
-    ``table()`` reads the append-mode memory sink. Session-window
+    Returns the unstarted streaming frame; drain it in append mode
+    (``drain(edit_sessions_stream(...), "append", name)``). Session-window
     aggregation supports append output only: a session row is emitted
     exactly once, when the watermark passes its end (last event + gap) —
     sessions still open within the watermark delay of the stream tail stay
@@ -49,24 +52,11 @@ def edit_sessions_stream(
         F.element_at(F.split("path", "/"), 3).alias("client"),
         F.timestamp_millis(F.col("ts_ms")).alias("ts"),
     )
-    agg = (
+    return (
         ev.withWatermark("ts", watermark)
         .groupBy("client", F.session_window("ts", f"{gap_ms} milliseconds"))
         .agg(F.count("*").alias("ops"))
     )
-    name = "edit_sessions_sink"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def table() -> DataFrame:
-        return spark.table(name)
-
-    return q, table
 
 
 # ---------------------------------------------------------------------------
@@ -81,10 +71,6 @@ def edit_sessions_stream(
 # session's end, so the availableNow no-data flush batch emits them all.
 # The sentinel row itself is filtered out AFTER the watermark node (it
 # advances the event-time clock but never enters session state).
-
-import os as _os
-import shutil as _shutil
-from datetime import timedelta as _timedelta
 
 SESSION_GAP_EVENTS_MS = 600_000  # 10-min inactivity gap
 
@@ -101,13 +87,13 @@ def _stage_with_sentinel(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .staging import staged_dir
+    from .staging import entities_sql_version, staged_dir
 
     src = f"{sf_dir.rstrip('/')}/events.parquet"
 
     def build(stage: str) -> None:
-        _os.makedirs(stage, exist_ok=True)
-        _shutil.copy(src, _os.path.join(stage, "events.parquet"))
+        os.makedirs(stage, exist_ok=True)
+        shutil.copy(src, os.path.join(stage, "events.parquet"))
         t = pq.read_table(src)
         tmax = pc.max(t["ts"]).as_py()
         # fixture generations store ts as timestamp[us/ns] (as_py ->
@@ -116,7 +102,7 @@ def _stage_with_sentinel(sf_dir: str) -> str:
         day = (
             24 * 3600 * 10**9
             if isinstance(tmax, int)
-            else _timedelta(hours=24)
+            else timedelta(hours=24)
         )
         row = {name: None for name in t.schema.names}
         row.update(
@@ -129,10 +115,8 @@ def _stage_with_sentinel(sf_dir: str) -> str:
         )
         pq.write_table(
             pa.Table.from_pylist([row], schema=t.schema),
-            _os.path.join(stage, "zz_sentinel.parquet"),
+            os.path.join(stage, "zz_sentinel.parquet"),
         )
-
-    from .staging import entities_sql_version
 
     return staged_dir(
         str(sf_dir), f"t17_sessions_{entities_sql_version()}", build

@@ -55,62 +55,6 @@ from ..registry import eager_cache_thunk, register
 _T26_WINDOWS = 8
 
 
-def _stage_token_events(e) -> str:
-    """Stage the non-orphan token ops as one parquet file per time window
-    plus a horizon sentinel (ts = max op ts + 1, the same 'now' the t25
-    batch fold uses), keyed on fixture content AND a code-version tag."""
-    import hashlib
-
-    import pyarrow as pa
-
-    from ..entities import ENTITY_SQL
-    from .staging import entities_sql_version, staged_dir, write_windowed_stage
-
-    sf_dir = str(e["__sf_dir__"])
-    pdf = (
-        e["token_ops"]
-        .filter(F.col("token_seq").isNotNull())
-        .select("token_seq", "op", "ts_ms", "expiry_ms", "max_ms", "owner")
-        .toPandas()
-        .sort_values(["ts_ms", "token_seq", "op"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    tmin, tmax = int(pdf["ts_ms"].min()), int(pdf["ts_ms"].max())
-    span = (tmax - tmin) // _T26_WINDOWS + 1
-    batch = (pdf["ts_ms"].astype("int64") - tmin) // span
-
-    code_ver = hashlib.md5(
-        (
-            ENTITY_SQL["token_ops"]
-            + f"|{_T26_WINDOWS}|{entities_sql_version()}"
-        ).encode()
-    ).hexdigest()[:6]
-
-    schema = pa.schema(
-        [
-            ("token_seq", pa.int64()),
-            ("op", pa.string()),
-            ("ts_ms", pa.int64()),
-            ("expiry_ms", pa.int64()),
-            ("max_ms", pa.int64()),
-            ("owner", pa.string()),
-        ]
-    )
-    sentinel = {
-        "token_seq": -1,
-        "op": "__sentinel__",
-        "ts_ms": tmax + 1,
-        "expiry_ms": None,
-        "max_ms": None,
-        "owner": None,
-    }
-    return staged_dir(
-        sf_dir,
-        f"t26_tokens_{code_ver}",
-        lambda stage: write_windowed_stage(stage, pdf, schema, batch, sentinel),
-    )
-
-
 @register(
     "t26_token_expiry_stream",
     oracle="""
@@ -203,24 +147,23 @@ WHERE tcan.token_seq IS NOT NULL OR tbad.token_seq IS NOT NULL
     "micro-batch shuffles one time window of token ops.",
 )
 def t26_token_expiry_stream(e) -> DataFrame:
-    spark = e["token_ops"].sparkSession
-
     def build() -> DataFrame:
         from .drain import drain
+        from .staging import even_windows, windowed_stream
         from .timeouts import token_expiry_event_stream
 
-        stage = _stage_token_events(e)
-        src = (
-            spark.readStream.schema(
-                "token_seq long, op string, ts_ms long, expiry_ms long, "
-                "max_ms long, owner string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+        # the horizon sentinel one past the last op: the t25 batch fold's 'now'
+        events, _ = windowed_stream(
+            e,
+            "t26_tokens",
+            e["token_ops"].filter(F.col("token_seq").isNotNull()),
+            "token_seq long, op string, ts_ms long, expiry_ms long, "
+            "max_ms long, owner string",
+            order=["ts_ms", "token_seq", "op"],
+            layout=even_windows(_T26_WINDOWS),
+            sentinel={"token_seq": -1, "op": "__sentinel__"},
+            version=str(_T26_WINDOWS),
         )
-        events = src.withColumn(
-            "ts", F.timestamp_millis(F.col("ts_ms"))
-        ).withWatermark("ts", "0 seconds")
         out = token_expiry_event_stream(events)
         sink, _ = drain(out, "append", "t26_tokens")
         return sink.filter(F.col("token_seq") >= 0).select(

@@ -4,8 +4,9 @@
   the input size is unknown) and its parquet-footer input;
 - gate results are identical at 1 state partition and at the cap;
 - t23 keeps its multi-batch semantics, and re-drains after the bench's
-  memo eviction instead of reading a pin;
-- no module copies the drain boilerplate again.
+  memo eviction instead of reading a pin, without collecting its entity
+  again once its stage is built;
+- no module copies the drain boilerplate or starts a memory sink.
 """
 
 from __future__ import annotations
@@ -136,6 +137,50 @@ def test_t23_multi_batch_drain_reruns_after_memo_eviction(
             assert len(progress) == 4
 
 
+def test_cached_windowed_stage_costs_no_collect(spark, sf_dir, monkeypatch):
+    """The entity behind a windowed stage is collected when the stage is
+    built, not on every drain: a fresh t23 stage costs one toPandas, a
+    re-drain over the built stage none."""
+    import shutil
+    import uuid
+
+    import bench
+    from hadoop_hdfs_spark import registry
+    from hadoop_hdfs_spark.streaming import staging
+
+    real_fp, real_staged = staging.fixture_fingerprint, staging.staged_dir
+    fresh, stages = uuid.uuid4().hex, []
+    monkeypatch.setattr(
+        staging, "fixture_fingerprint", lambda d: real_fp(d) + fresh
+    )
+    monkeypatch.setattr(
+        staging,
+        "staged_dir",
+        lambda *a: stages.append(real_staged(*a)) or stages[-1],
+    )
+    frame_cls = type(registry._entities(spark, sf_dir)["lease_events"])
+    real_to_pandas, collects = frame_cls.toPandas, []
+
+    def counting_to_pandas(df):
+        collects.append(df)
+        return real_to_pandas(df)
+
+    monkeypatch.setattr(frame_cls, "toPandas", counting_to_pandas)
+    query = registry.queries()["t23_lease_expiry_stream"]
+    try:
+        counts = []
+        for _ in range(2):
+            bench._evict_result_memo("t23_lease_expiry_stream")
+            before = len(collects)
+            assert query(spark, sf_dir).count() > 0
+            counts.append(len(collects) - before)
+    finally:
+        for stage in set(stages):
+            shutil.rmtree(stage, ignore_errors=True)
+    assert counts == [1, 0]
+    assert len(stages) == 2 and stages[0] == stages[1]
+
+
 def _modules():
     """Every package module, parsed."""
     for path in sorted(PKG.rglob("*.py")):
@@ -153,25 +198,26 @@ def _calls(node, attr):
 
 
 # Functions allowed to trigger or await a streaming query outside
-# drain.py: the library helpers that return ``(query, table)`` to their
-# caller, and t2c, whose foreachBatch replay is no memory-sink drain (it
-# sizes its partitions with drain.state_partitions).
+# drain.py: the foreachBatch writers, which are no memory-sink drains
+# (t2c sizes its partitions with drain.state_partitions).
 _ALLOWED = {
-    ("streaming/dedup.py", "dedup_documents_stream"),
-    ("streaming/joins.py", "open_close_pairs_stream"),
-    ("streaming/rates.py", "event_rates_stream"),
-    ("streaming/replay.py", "edits_opcode_stream_stats"),
     ("streaming/replay.py", "replay_edits_stream"),
-    ("streaming/sessions.py", "edit_sessions_stream"),
     ("streaming/checkpoint.py", "t2c_checkpoint_replay"),
 }
 
 
 def test_no_module_copies_the_drain():
-    found = set()
+    found, memory_sinks = set(), set()
     for mod, tree in _modules():
         if mod == "streaming/drain.py":
             continue
+        memory_sinks |= {
+            (mod, c.lineno)
+            for c in _calls(tree, "format")
+            if c.args
+            and isinstance(c.args[0], ast.Constant)
+            and c.args[0].value == "memory"
+        }
         for fn in tree.body:
             if not isinstance(fn, ast.FunctionDef):
                 continue
@@ -182,6 +228,7 @@ def test_no_module_copies_the_drain():
             ]
             if triggers or _calls(fn, "awaitTermination"):
                 found.add((mod, fn.name))
+    assert memory_sinks == set(), "drain through streaming.drain.drain()"
     assert found - _ALLOWED == set(), "drain through streaming.drain.drain()"
     assert _ALLOWED - found == set(), "stale exception"
 

@@ -389,29 +389,34 @@ def test_t26_token_monitor_sequential_authority(spark, tmp_path):
     assert len(emitted) == 4
 
 
-def test_t26_output_invariant_to_stream_slicing(spark, sf_dir, monkeypatch):
-    """The t26 docstring's purity claim, pinned: the drained removal log
-    is a pure function of the data however the micro-batches slice the
-    stream. Re-stage the same token ops into 3 windows instead of 8
-    (different watermark advance points, different data/timeout
-    interleavings per token) and the emitted relation must be
-    IDENTICAL."""
+@pytest.mark.parametrize(
+    "query, module, windows",
+    [
+        pytest.param(q, m, w, id=q)
+        for q, m, w in [
+            ("t26_token_expiry_stream", "tokens", "_T26_WINDOWS"),
+            ("t23_lease_expiry_stream", "leases", "_T23_WINDOWS"),
+        ]
+    ],
+)
+def test_t26_output_invariant_to_stream_slicing(
+    spark, sf_dir, monkeypatch, query, module, windows
+):
+    """The purity claim of the t26 and t23 docstrings, pinned: the drained
+    relation is a pure function of the data however the micro-batches
+    slice the stream. Re-stage the same events into 3 windows instead of
+    8 (different watermark advance points, different data/timeout
+    interleavings per key) and the emitted relation must be IDENTICAL."""
+    import importlib
+
+    import bench
     from hadoop_hdfs_spark import registry
-    from hadoop_hdfs_spark.streaming import tokens as tok
 
-    baseline = {
-        tuple(r)
-        for r in registry.queries()["t26_token_expiry_stream"](
-            spark, sf_dir
-        ).collect()
-    }
-    monkeypatch.setattr(tok, "_T26_WINDOWS", 3)  # code_ver keys a new stage
+    run = registry.queries()[query]
+    baseline = {tuple(r) for r in run(spark, sf_dir).collect()}
+    mod = importlib.import_module(f"hadoop_hdfs_spark.streaming.{module}")
+    monkeypatch.setattr(mod, windows, 3)  # the window count keys a new stage
     # evict the memoized 8-window frame so the query rebuilds and re-drains
-    from hadoop_hdfs_spark.registry import _CACHED
-
-    e = registry._entities(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _CACHED if k[0] == app and k[2] == "t26_tokens"]:
-        _CACHED.pop(k)
-    resliced = {tuple(r) for r in tok.t26_token_expiry_stream(e).collect()}
+    bench._evict_result_memo(query)
+    resliced = {tuple(r) for r in run(spark, sf_dir).collect()}
     assert resliced == baseline and baseline

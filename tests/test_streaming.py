@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_hdfs_spark.entities import load_entities
+from hadoop_hdfs_spark.streaming.drain import drain
 from hadoop_hdfs_spark.pipeline.multimodal import (
     decode_kernel,
     documents_as_assets,
@@ -160,9 +161,10 @@ def test_edits_opcode_stream_matches_batch(spark, sf_dir, tmp_path):
     e["edits"].select(*EDITS_COLUMNS).coalesce(
         3
     ).write.parquet(edits_dir)
-    q, table = edits_opcode_stream_stats(spark, edits_dir)
-    assert q.awaitTermination(240), "stream did not drain in time"
-    stream_counts = {r["op"]: r["count"] for r in table().collect()}
+    sink, _ = drain(
+        edits_opcode_stream_stats(spark, edits_dir), "complete", "opcode_stats"
+    )
+    stream_counts = {r["op"]: r["count"] for r in sink.collect()}
     batch_counts = {
         r["op"]: r["n"]
         for r in e["edits"].groupBy("op").agg(F.count("*").alias("n")).collect()
@@ -183,15 +185,18 @@ def test_edit_sessions_stream_matches_batch(spark, sf_dir, tmp_path):
     e["edits"].select(*EDITS_COLUMNS).coalesce(
         1
     ).write.parquet(edits_dir)
-    q, table = edit_sessions_stream(spark, edits_dir, watermark="1 milliseconds")
-    assert q.awaitTermination(240), "stream did not drain in time"
+    sink, _ = drain(
+        edit_sessions_stream(spark, edits_dir, watermark="1 milliseconds"),
+        "append",
+        "edit_sessions",
+    )
     streamed = {
         (
             r["client"],
             int(r["session_window"]["start"].timestamp() * 1000),
             r["ops"],
         )
-        for r in table().collect()
+        for r in sink.collect()
     }
     batch_rows = registry.queries()["t10_edit_sessions"](spark, sf_dir).collect()
     max_ts = max(r["session_end_ms"] for r in batch_rows)
@@ -298,8 +303,11 @@ def test_event_rates_stream_matches_batch(spark, sf_dir, tmp_path):
     e = load_entities(spark, sf_dir)
     events_dir = str(tmp_path / "events_rates")
     e["events"].coalesce(1).write.parquet(events_dir)
-    q, table = event_rates_stream(spark, events_dir, watermark="1 milliseconds")
-    assert q.awaitTermination(240), "stream did not drain in time"
+    sink, _ = drain(
+        event_rates_stream(spark, events_dir, watermark="1 milliseconds"),
+        "append",
+        "event_rates",
+    )
     streamed = {
         (
             int(r["window"]["start"].timestamp() * 1000),
@@ -307,7 +315,7 @@ def test_event_rates_stream_matches_batch(spark, sf_dir, tmp_path):
             r["n_events"],
             r["value_cents"],
         )
-        for r in table().collect()
+        for r in sink.collect()
     }
     batch_rows = registry.queries()["t11_event_rates"](spark, sf_dir).collect()
     max_end = max(r["bucket_start_ms"] for r in batch_rows) + 60000
@@ -342,15 +350,35 @@ def test_dedup_stream_keeps_one_per_digest(spark, sf_dir, tmp_path):
     # tiebreak is arbitrary — push the original file decisively earlier
     for p in originals:
         _os.utime(p, (_os.path.getmtime(p) - 3600,) * 2)
-    q, table = dedup_documents_stream(
-        spark, docs_dir, watermark="365 days", max_files_per_trigger=1
+    sink, _ = drain(
+        dedup_documents_stream(
+            spark, docs_dir, watermark="365 days", max_files_per_trigger=1
+        ),
+        "append",
+        "dedup_documents",
     )
-    assert q.awaitTermination(240), "stream did not drain in time"
-    got = table().collect()
+    got = sink.collect()
     n_distinct = base.select(F.md5("text")).distinct().count()
     assert len(got) == n_distinct
     # first occurrence wins: every kept doc_id is from the original range
     assert all(r["doc_id"] < 1000000 for r in got)
+
+def test_helper_drains_in_one_session_keep_their_own_rows(spark, tmp_path):
+    """Two drains of one helper in one session get their own sinks: the
+    second run over a larger directory leaves the first result as it was."""
+    from hadoop_hdfs_spark.streaming.dedup import dedup_documents_stream
+
+    results = []
+    for n in (3, 5):
+        docs_dir = str(tmp_path / f"docs_{n}")
+        spark.createDataFrame(
+            [(i, f"doc {i}") for i in range(n)], "doc_id LONG, text STRING"
+        ).coalesce(1).write.parquet(docs_dir)
+        sink, _ = drain(dedup_documents_stream(spark, docs_dir), "append", "dedup")
+        results.append(sink)
+    assert [r.count() for r in results] == [3, 5]
+    assert {r["doc_id"] for r in results[0].collect()} == {0, 1, 2}
+
 
 def test_open_close_pairs_stream_matches_batch(spark, sf_dir, tmp_path):
     """Stream-stream interval join == the equivalent batch interval join
@@ -363,11 +391,14 @@ def test_open_close_pairs_stream_matches_batch(spark, sf_dir, tmp_path):
     e["edits"].select(*EDITS_COLUMNS).coalesce(
         2
     ).write.parquet(edits_dir)
-    q, table = open_close_pairs_stream(spark, edits_dir, max_files_per_trigger=1)
-    assert q.awaitTermination(240), "stream did not drain in time"
+    sink, _ = drain(
+        open_close_pairs_stream(spark, edits_dir, max_files_per_trigger=1),
+        "append",
+        "open_close_pairs",
+    )
     streamed = {
         (r["path"], r["open_txid"], r["close_txid"], r["open_age_ms"])
-        for r in table().collect()
+        for r in sink.collect()
     }
     adds = e["edits"].filter(F.col("op") == "OP_ADD")
     closes = e["edits"].filter(F.col("op") == "OP_CLOSE")
