@@ -33,16 +33,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# a9b_content_checksum pins its blob corpus at import; bench it against the
-# bench SF's deterministic blob fixture (fixed bytes per SF, blobfixture.py)
-# so its cost scales with the dataset like every other query — and ONLY
-# with the dataset, not with parquet artifact overhead.
-from hadoop_hdfs_spark.blobfixture import blob_fixture_dir  # noqa: E402
-from hadoop_hdfs_spark.pipeline.gifcodec import gif_fixture_dir  # noqa: E402
-from hadoop_hdfs_spark.pipeline.mediafixture import (  # noqa: E402
-    png_fixture_dir,
-    wav_fixture_dir,
-)
+# The corpus gates (a9b/s1/s5c blobs, the GIF/PNG/WAV certify gates) pin
+# their corpora at import; bench them against the bench SF's deterministic
+# fixtures (fixed bytes per SF, fixtures.py) so their cost scales with the
+# dataset like every other query, and ONLY with the dataset.
+from hadoop_hdfs_spark.fixtures import build_once, fixture_env  # noqa: E402
+
 
 def _parse_sf(sf_dir: str, default: float) -> float:
     """sf from a directory name: 'sf0.1', 'sf1', 'sf1_<hash>' all parse."""
@@ -53,12 +49,8 @@ def _parse_sf(sf_dir: str, default: float) -> float:
 
 
 _bench_sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-_bench_sf = _parse_sf(_bench_sf_dir, 0.1)
-os.environ.setdefault("SPARK_GRAFT_BLOB_DIR", blob_fixture_dir(_bench_sf))
-# the media certify gates pin their corpora at import the same way
-os.environ.setdefault("SPARK_GRAFT_GIF_DIR", gif_fixture_dir(_bench_sf))
-os.environ.setdefault("SPARK_GRAFT_PNG_DIR", png_fixture_dir(_bench_sf))
-os.environ.setdefault("SPARK_GRAFT_WAV_DIR", wav_fixture_dir(_bench_sf))
+for _k, _v in fixture_env(_parse_sf(_bench_sf_dir, 0.1)).items():
+    os.environ.setdefault(_k, _v)
 
 from hadoop_hdfs_spark import registry
 from hadoop_hdfs_spark.session import get_spark
@@ -222,10 +214,7 @@ def main() -> None:
                 os.environ,
                 SPARK_GRAFT_SF_DIR=sf1_dir,
                 SPARK_GRAFT_SKIP_SF1="1",
-                SPARK_GRAFT_BLOB_DIR=blob_fixture_dir(sf * 10 if sf > 0 else 1.0),
-                SPARK_GRAFT_GIF_DIR=gif_fixture_dir(sf * 10 if sf > 0 else 1.0),
-                SPARK_GRAFT_PNG_DIR=png_fixture_dir(sf * 10 if sf > 0 else 1.0),
-                SPARK_GRAFT_WAV_DIR=wav_fixture_dir(sf * 10 if sf > 0 else 1.0),
+                **fixture_env(sf * 10 if sf > 0 else 1.0),
                 SPARK_GRAFT_BENCH_DETAIL=sf1_detail,
                 # Same three-warm-pass median rigor as the base leg
                 # (judge r9 #1): the single-pass sf1 leg put 16x
@@ -315,14 +304,16 @@ def _materialize_sf1(src_dir: str, factor: int = 10) -> str:
     """Build the 10x fact-scaled dataset with DuckDB (no JVM): fact tables
     are unioned ``factor`` times with key offsets so FK chains stay intact
     (o_custkey follows the customer copies, l_orderkey the order copies);
-    dimensions keep one copy. Idempotent via a _DONE marker."""
+    dimensions keep one copy. Built once (fixtures.build_once), so two
+    concurrent probes never interleave COPYs into one directory."""
+    sf1_dir = _sf1_dir_for(src_dir, factor)
+    return build_once(sf1_dir, lambda p: _write_sf1(src_dir, factor, sf1_dir, p))
+
+
+def _write_sf1(src_dir: str, factor: int, sf1_dir: str, build_dir: str) -> None:
     import duckdb
     import shutil
 
-    _SF1_DIR = _sf1_dir_for(src_dir, factor)
-    done = os.path.join(_SF1_DIR, "_DONE")
-    if os.path.exists(done):
-        return _SF1_DIR
     # fingerprint miss: prune this source's SUPERSEDED scale-ups (older
     # content suffixes and their crashed .build leftovers) before building
     # the new one — without this every fixture regeneration orphans a
@@ -338,9 +329,9 @@ def _materialize_sf1(src_dir: str, factor: int = 10) -> str:
     # FileNotFound.
     import glob as _glob
 
-    src_prefix = _SF1_DIR.rsplit("_", 1)[0]
+    src_prefix = sf1_dir.rsplit("_", 1)[0]
     for stale in _glob.glob(f"{src_prefix}_*"):
-        if os.path.basename(stale).startswith(os.path.basename(_SF1_DIR)):
+        if os.path.basename(stale).startswith(os.path.basename(sf1_dir)):
             continue
         tombstone = os.path.join(stale, "_SUPERSEDED")
         try:
@@ -350,17 +341,12 @@ def _materialize_sf1(src_dir: str, factor: int = 10) -> str:
             # pass once the grace window has drained any in-flight reader
             try:
                 with open(tombstone, "w") as fh:
-                    fh.write(f"superseded_by={os.path.basename(_SF1_DIR)}\n")
+                    fh.write(f"superseded_by={os.path.basename(sf1_dir)}\n")
             except OSError:
                 pass  # dir vanished under a concurrent pruner
             continue
         if since_superseded > 6 * 3600:
             shutil.rmtree(stale, ignore_errors=True)
-    # build into a pid-suffixed dir and rename into place (the
-    # blobfixture pattern): two concurrent probes must never interleave
-    # COPYs into one directory and mark the mix done
-    build_dir = f"{_SF1_DIR}.build-{os.getpid()}"
-    shutil.rmtree(build_dir, ignore_errors=True)
     os.makedirs(build_dir)
     con = duckdb.connect()
     offsets: dict[str, int] = {}  # key column -> stride
@@ -397,37 +383,6 @@ def _materialize_sf1(src_dir: str, factor: int = 10) -> str:
             f"COPY (SELECT * FROM read_parquet('{src_dir}/{t}.parquet')) "
             f"TO '{build_dir}/{t}.parquet' (FORMAT PARQUET)"
         )
-    open(os.path.join(build_dir, "_DONE"), "w").close()
-    try:
-        os.rename(build_dir, _SF1_DIR)
-    except OSError:
-        if os.path.exists(done):  # lost the race to a complete build
-            shutil.rmtree(build_dir, ignore_errors=True)
-        else:  # torn leftover from a crashed builder — replace it
-            shutil.rmtree(_SF1_DIR, ignore_errors=True)
-            try:
-                os.rename(build_dir, _SF1_DIR)
-            except OSError:
-                # two builders that both found the torn target take this
-                # branch together and race the rename; the loser must
-                # treat the winner's complete build as success (mirror of
-                # the staged-dir race handling), not die on the OSError.
-                # KEEP our own complete build until a winner is confirmed:
-                # the winner sits between its rmtree and rename for a
-                # moment, so wait out that window (retrying our own rename
-                # too) before deleting the one complete build we hold.
-                for _ in range(50):
-                    if os.path.exists(done):
-                        break
-                    try:
-                        os.rename(build_dir, _SF1_DIR)
-                        break
-                    except OSError:
-                        time.sleep(0.1)
-                shutil.rmtree(build_dir, ignore_errors=True)
-                if not os.path.exists(done):
-                    raise
-    return _SF1_DIR
 
 
 def scale_probe() -> None:
@@ -453,10 +408,7 @@ def scale_probe() -> None:
         env = dict(
             os.environ,
             SPARK_GRAFT_SF_DIR=d,
-            SPARK_GRAFT_BLOB_DIR=blob_fixture_dir(blob_sf),
-            SPARK_GRAFT_GIF_DIR=gif_fixture_dir(blob_sf),
-            SPARK_GRAFT_PNG_DIR=png_fixture_dir(blob_sf),
-            SPARK_GRAFT_WAV_DIR=wav_fixture_dir(blob_sf),
+            **fixture_env(blob_sf),
             SPARK_GRAFT_BENCH_DETAIL=detail_path,
             SPARK_GRAFT_SKIP_SF1="1",  # the probe runs both SFs itself
             SPARK_GRAFT_BENCH_RUNS="1",  # ratios compare warm vs warm

@@ -387,10 +387,10 @@ _S5C_LEN = 256
 
 
 def _s5c_register() -> None:
-    from .blobfixture import resolve_blob_corpus
+    from .fixtures import resolve_corpus
     from .registry import eager_cache_thunk, register as _register_query
 
-    blob_dir, blob_glob = resolve_blob_corpus()
+    blob_dir, blob_glob, _ = resolve_corpus("BLOB")
 
     @_register_query(
         "s5c_hftp_range_read",

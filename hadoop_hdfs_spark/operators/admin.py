@@ -316,11 +316,11 @@ def t5_block_report_upsert(e) -> DataFrame:
     )
 
 
-# s1 scans the same pinned blob corpus as a9b (blobfixture.py): the DuckDB
+# s1 scans the same pinned blob corpus as a9b (fixtures.py): the DuckDB
 # oracle needs the identical files in static SQL text.
-from ..blobfixture import resolve_blob_corpus as _resolve_blob_corpus
+from ..fixtures import resolve_corpus
 
-_S1_BLOB_DIR, _S1_BLOB_GLOB = _resolve_blob_corpus()
+_S1_BLOB_DIR, _S1_BLOB_GLOB, _ = resolve_corpus("BLOB")
 _S1_SPAN = 65536  # one 'block' per read — the 64 KiB span a9b rolls up
 
 

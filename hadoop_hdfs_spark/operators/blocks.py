@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..entities import HEARTBEAT_EXPIRY_MS, NOW_MS
-from ..registry import eager_cache, eager_cache_thunk, register
+from ..registry import eager_cache_thunk, register
 from ..session import fan_out
 
 # Shared DuckDB fragment: per-block replica rollup.
@@ -727,12 +727,12 @@ def a9_file_checksum(e) -> DataFrame:
 # must name the identical files in STATIC SQL text (read_blob takes a
 # literal glob); defaults to the DEDICATED deterministic blob fixture at
 # the driver's correctness scale factor (fixed byte volume per SF — see
-# blobfixture.py; the old sf-dir-parquet default made the fixture grow
+# fixtures.py; the old sf-dir-parquet default made the fixture grow
 # with engine artifacts). tests/conftest.py points SPARK_GRAFT_BLOB_DIR at
 # the test-SF fixture; bench.py at the bench-SF fixture.
-from ..blobfixture import resolve_blob_corpus as _resolve_blob_corpus
+from ..fixtures import resolve_corpus
 
-_BLOB_DIR, _BLOB_GLOB = _resolve_blob_corpus()
+_BLOB_DIR, _BLOB_GLOB, _ = resolve_corpus("BLOB")
 
 
 @register(

@@ -20,7 +20,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import eager_cache, register, eager_cache_thunk
+from ..registry import register, eager_cache_thunk
 from ..session import fan_out
 
 N_PLANES = 8

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import corpus_pin, eager_cache, eager_cache_thunk, register
+from ..registry import corpus_pin, eager_cache_thunk, register
 from ..session import fan_out
 
 N_HASH = 16

@@ -28,9 +28,9 @@ beyond the reference (multimodal decode / frame-sample plumbing).
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import struct
+
+from ..fixtures import asset_fixture_dir
 
 # ---------------------------------------------------------------------------
 # LZW + container DECODE (factory-built: pickles by value, see module doc)
@@ -350,7 +350,7 @@ def encode_gif(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic GIF corpus for the driver gate (the blobfixture pattern)
+# Deterministic GIF corpus for the driver gate (fixtures.asset_fixture_dir)
 # ---------------------------------------------------------------------------
 
 SCREEN_W, SCREEN_H, N_COLORS = 11, 7, 8  # non-power sizes exercise interlace
@@ -400,52 +400,9 @@ def fixture_gif_bytes(a: int) -> bytes:
     return encode_gif(SCREEN_W, SCREEN_H, pal, frames)
 
 
-def fixture_n_assets(sf: float) -> int:
-    return max(6, int(round(600 * sf)))
-
-
 def gif_fixture_dir(sf: float) -> str:
-    """Return (building atomically on first use) the GIF corpus for ``sf``
-    — same pid-suffixed-build-then-rename discipline as blobfixture."""
-    tag = f"sf{sf:g}_{_GEN_VERSION}"
-    d = f"/tmp/spark_graft_gifs_{tag}"
-    done = os.path.join(d, ".done")
-    if os.path.exists(done):
-        return d
-    tmp = f"{d}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    for a in range(fixture_n_assets(sf)):
-        with open(os.path.join(tmp, f"asset_{a:05d}.gif"), "wb") as f:
-            f.write(fixture_gif_bytes(a))
-    open(os.path.join(tmp, ".done"), "w").close()
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if not os.path.exists(done):
-            shutil.rmtree(d, ignore_errors=True)
-            try:
-                os.rename(tmp, d)
-            except OSError:
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
-    return d
-
-
-def resolve_gif_corpus() -> tuple[str, int]:
-    """(directory, asset count) for the video-certify corpus.
-
-    ``SPARK_GRAFT_GIF_DIR`` overrides (bench / scale probe point it at a
-    larger generated fixture); default is the driver correctness SF. The
-    count is read from the resolved directory so the baked oracle always
-    describes the same corpus the Spark side reads."""
-    env = os.environ.get("SPARK_GRAFT_GIF_DIR")
-    d = env if env else gif_fixture_dir(0.01)
-    try:
-        n = sum(1 for name in os.listdir(d) if name.endswith(".gif"))
-    except OSError:
-        n = 0
-    return d, n
+    """Return (building on first use) the GIF corpus for ``sf``."""
+    return asset_fixture_dir("gifs", sf, _GEN_VERSION, "gif", fixture_gif_bytes)
 
 
 def frame_canvas_md5(rgb: bytes) -> str:

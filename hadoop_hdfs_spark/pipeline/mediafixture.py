@@ -21,10 +21,10 @@ The WAV writer is the stdlib ``wave`` module itself.
 
 from __future__ import annotations
 
-import os
-import shutil
 import struct
 import zlib
+
+from ..fixtures import asset_fixture_dir
 
 # ----------------------------------------------------------------- PNG corpus
 
@@ -144,70 +144,9 @@ def wav_fixture_bytes(a: int) -> bytes:
 # ------------------------------------------------------------ fixture builds
 
 
-def fixture_n_assets(sf: float) -> int:
-    return max(6, int(round(600 * sf)))
-
-
-def _atomic_build(d: str, write_all) -> str:
-    """Marker-gated pid-suffixed build-then-rename (blobfixture pattern)."""
-    done = os.path.join(d, ".done")
-    if os.path.exists(done):
-        return d
-    tmp = f"{d}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    write_all(tmp)
-    open(os.path.join(tmp, ".done"), "w").close()
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        if not os.path.exists(done):
-            shutil.rmtree(d, ignore_errors=True)
-            try:
-                os.rename(tmp, d)
-            except OSError:
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
-    return d
-
-
 def png_fixture_dir(sf: float) -> str:
-    d = f"/tmp/spark_graft_pngs_sf{sf:g}_{_PNG_GEN_VERSION}"
-
-    def write_all(tmp: str) -> None:
-        for a in range(fixture_n_assets(sf)):
-            with open(os.path.join(tmp, f"asset_{a:05d}.png"), "wb") as f:
-                f.write(png_fixture_bytes(a))
-
-    return _atomic_build(d, write_all)
+    return asset_fixture_dir("pngs", sf, _PNG_GEN_VERSION, "png", png_fixture_bytes)
 
 
 def wav_fixture_dir(sf: float) -> str:
-    d = f"/tmp/spark_graft_wavs_sf{sf:g}_{_WAV_GEN_VERSION}"
-
-    def write_all(tmp: str) -> None:
-        for a in range(fixture_n_assets(sf)):
-            with open(os.path.join(tmp, f"asset_{a:05d}.wav"), "wb") as f:
-                f.write(wav_fixture_bytes(a))
-
-    return _atomic_build(d, write_all)
-
-
-def _resolve(env_var: str, builder, ext: str) -> tuple[str, int]:
-    env = os.environ.get(env_var)
-    d = env if env else builder(0.01)
-    try:
-        n = sum(1 for name in os.listdir(d) if name.endswith(ext))
-    except OSError:
-        n = 0
-    return d, n
-
-
-def resolve_png_corpus() -> tuple[str, int]:
-    """(dir, asset count); SPARK_GRAFT_PNG_DIR overrides (bench/probe)."""
-    return _resolve("SPARK_GRAFT_PNG_DIR", png_fixture_dir, ".png")
-
-
-def resolve_wav_corpus() -> tuple[str, int]:
-    """(dir, asset count); SPARK_GRAFT_WAV_DIR overrides (bench/probe)."""
-    return _resolve("SPARK_GRAFT_WAV_DIR", wav_fixture_dir, ".wav")
+    return asset_fixture_dir("wavs", sf, _WAV_GEN_VERSION, "wav", wav_fixture_bytes)

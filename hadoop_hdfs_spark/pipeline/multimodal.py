@@ -780,13 +780,13 @@ def mm_frame_certify(e) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Resolved at import so the baked oracle and the Spark scan describe the
-# same corpus (the s1/blobfixture pattern). SPARK_GRAFT_GIF_DIR points
+# same corpus (fixtures.resolve_corpus). SPARK_GRAFT_GIF_DIR points
 # bench / the scale probe at a larger generated fixture.
+from ..fixtures import resolve_corpus  # noqa: E402
 from .gifcodec import SCREEN_H as _GIF_H  # noqa: E402
 from .gifcodec import SCREEN_W as _GIF_W  # noqa: E402
-from .gifcodec import resolve_gif_corpus as _resolve_gif_corpus  # noqa: E402
 
-_GIF_DIR, _GIF_N = _resolve_gif_corpus()
+_GIF_DIR, _, _GIF_N = resolve_corpus("GIF")
 
 
 @register(
@@ -863,11 +863,9 @@ from .mediafixture import PNG_H as _PNG_H  # noqa: E402
 from .mediafixture import PNG_W as _PNG_W  # noqa: E402
 from .mediafixture import WAV_RATE as _WAV_RATE  # noqa: E402
 from .mediafixture import WAV_WINDOW as _WAV_WIN  # noqa: E402
-from .mediafixture import resolve_png_corpus as _resolve_png_corpus  # noqa: E402
-from .mediafixture import resolve_wav_corpus as _resolve_wav_corpus  # noqa: E402
 
-_PNG_DIR, _PNG_N = _resolve_png_corpus()
-_WAV_DIR, _WAV_N = _resolve_wav_corpus()
+_PNG_DIR, _, _PNG_N = resolve_corpus("PNG")
+_WAV_DIR, _, _WAV_N = resolve_corpus("WAV")
 
 
 def _binary_assets(spark, directory: str, ext: str) -> DataFrame:

@@ -94,13 +94,11 @@ def _cache_pins() -> int:
 
 _CACHED_MAX = _cache_pins()
 
-# How operator pins materialize: "checkpoint" (default) eagerly computes
-# AND truncates lineage (small downstream plans — see eager_cache);
-# "cache" keeps the classic recompute-capable InMemoryRelation pin for
-# deployments where executor loss must not fail a running query; "off"
+# How operator pins materialize: "checkpoint" eagerly computes AND
+# truncates lineage (small downstream plans — see eager_cache); "off"
 # (plan-inspection only — see pin_override) passes the derivation through
 # untouched so its full physical shape stays visible to .explain().
-_PIN_MODE = os.environ.get("SPARK_GRAFT_PIN_MODE", "checkpoint")
+_PIN_MODE = "checkpoint"
 
 
 def pin_override(mode: str):
@@ -150,20 +148,15 @@ def eager_cache(e: dict, tag: str, df: DataFrame) -> DataFrame:
         # re-pins on the next invocation (correctness over reuse).
         for qk in [k for k in _QUERY_PLANS if k[:2] == cold_key[:2]]:
             _QUERY_PLANS.pop(qk, None)
-    if _PIN_MODE == "checkpoint":
-        # localCheckpoint = the same eager one-materialization pin, PLUS
-        # lineage truncation: the pinned frame's logical plan collapses to
-        # a LogicalRDD scan, so every composed query re-analyzes a
-        # ~10-node tree instead of the full derivation (the W2 queue's
-        # consumers carried 700+-node trees through analysis per
-        # invocation — r11 measured j10's construction alone at 1.2 s).
-        # Storage semantics match cache() (MEMORY_AND_DISK); the tradeoff
-        # is recompute-on-executor-loss becomes fail-and-rerun, which a
-        # cluster deployment can opt out of via SPARK_GRAFT_PIN_MODE=cache.
-        c = df.localCheckpoint(eager=True)
-    else:
-        c = df.cache()
-        c.count()
+    # localCheckpoint = an eager one-materialization pin, PLUS lineage
+    # truncation: the pinned frame's logical plan collapses to a
+    # LogicalRDD scan, so every composed query re-analyzes a ~10-node tree
+    # instead of the full derivation (the W2 queue's consumers carried
+    # 700+-node trees through analysis per invocation — r11 measured j10's
+    # construction alone at 1.2 s). Storage semantics match cache()
+    # (MEMORY_AND_DISK); the tradeoff is that recompute-on-executor-loss
+    # becomes fail-and-rerun.
+    c = df.localCheckpoint(eager=True)
     _CACHED[key] = c
     return c
 

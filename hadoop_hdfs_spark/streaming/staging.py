@@ -12,9 +12,11 @@ Two hazards with a naive path-keyed cache (ADVICE r3):
    every fixture parquet) into the stage key, so regeneration gets a fresh
    stage directory automatically.
 2. *Torn stages*: marker-after-write is not atomic under concurrent runs.
-   Fix: build into a pid-suffixed temp dir, write the marker INSIDE it,
-   then rename into place — a visible stage dir therefore always carries a
-   complete marker, and the loser of a rename race discards its build.
+   Fix: :func:`staged_dir` builds through ``fixtures.build_once``, the one
+   build-once primitive of every /tmp artifact: a pid-suffixed temp dir
+   gets the ``_STAGED`` marker INSIDE it and is renamed into place, so a
+   visible stage always carries a complete marker, a failed build leaves
+   nothing behind, and the loser of a rename race discards its build.
 """
 
 from __future__ import annotations
@@ -22,15 +24,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
-import sys
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MARKER = "_STAGED"
+from ..fixtures import build_once
+
 _LAYOUT = "_LAYOUT.json"  # a windowed stage's layout values, beside the marker
 
 
@@ -71,48 +71,7 @@ def staged_dir(sf_dir: str, tag: str, build: Callable[[str], None]) -> str:
     key = hashlib.md5(
         f"{sf_dir}|{tag}|{fixture_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:12]
-    stage = f"/tmp/{tag}_{key}"
-    done = os.path.join(stage, _MARKER)
-    if os.path.exists(done):
-        return stage
-    tmp = f"{stage}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # One-time fixture build (cold path only): announce start and elapsed
-    # time on stderr so a driver watching a cold run sees progress instead
-    # of an apparent hang — the GroupState/checkpoint gates' staging is the
-    # dominant cold-start cost (judge r7 "What's wrong" #3).
-    print(f"[staging] building {tag} (one-time, cached) ...",
-          file=sys.stderr, flush=True)
-    t0 = time.monotonic()
-    try:
-        build(tmp)
-        open(os.path.join(tmp, _MARKER), "w").close()
-    except BaseException:
-        # a failed build (OOM, disk full, Ctrl-C) must not leak a partial
-        # pid-suffixed copy: the same-pid rmtree above never fires again
-        # (new process = new pid), so orphans would accumulate in /tmp
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    print(f"[staging] {tag} built in {time.monotonic() - t0:.1f}s",
-          file=sys.stderr, flush=True)
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        if not os.path.exists(done):
-            # leftover torn stage from a crashed build at this exact
-            # fingerprint — replace it with our complete one. A CONCURRENT
-            # builder may complete between the rmtree and this rename, so
-            # re-check the marker instead of raising (ADVICE r4).
-            shutil.rmtree(stage, ignore_errors=True)
-            try:
-                os.rename(tmp, stage)
-            except OSError:
-                if not os.path.exists(done):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-        else:  # lost the race to a complete concurrent build
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return build_once(f"/tmp/{tag}_{key}", build)
 
 
 def write_windowed_stage(stage, pdf, schema, batch, sentinel_row) -> None:

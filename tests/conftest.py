@@ -10,13 +10,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from hadoop_hdfs_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-# a9b_content_checksum pins its blob corpus at import (the DuckDB oracle
-# needs a literal glob); point it at the test-SF deterministic blob
-# fixture before registry import (blobfixture.py — fixed bytes per SF).
-from hadoop_hdfs_spark.blobfixture import blob_fixture_dir  # noqa: E402
+# The corpus gates (a9b/s1/s5c blobs, GIF/PNG/WAV certify) pin their
+# corpora at import (the DuckDB oracles bake them into static SQL); point
+# them at the test SF's deterministic fixtures before registry import.
+from hadoop_hdfs_spark.fixtures import fixture_env  # noqa: E402
 
 _sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.001
-os.environ.setdefault("SPARK_GRAFT_BLOB_DIR", blob_fixture_dir(_sf))
+for _k, _v in fixture_env(_sf).items():
+    os.environ.setdefault(_k, _v)
 
 
 @pytest.fixture(scope="session")

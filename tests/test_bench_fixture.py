@@ -34,13 +34,13 @@ def test_superseded_sf1_dirs_get_tombstone_then_grace_pruned(tmp_path):
     import bench
 
     v1 = bench._materialize_sf1(_copy_src(tmp_path), factor=2)
-    assert os.path.exists(os.path.join(v1, "_DONE"))
+    assert os.path.exists(os.path.join(v1, "_STAGED"))
     # rebuild the SAME source at new content: the old dir must survive the
     # prune pass with a tombstone, not be deleted outright
     src_dir = tmp_path / "src_sf"
     _retouch(str(src_dir))
     v2 = bench._materialize_sf1(str(src_dir), factor=2)
-    assert v2 != v1 and os.path.exists(os.path.join(v2, "_DONE"))
+    assert v2 != v1 and os.path.exists(os.path.join(v2, "_STAGED"))
     tomb = os.path.join(v1, "_SUPERSEDED")
     assert os.path.exists(v1) and os.path.exists(tomb), (
         "superseded dir was pruned (or not tombstoned) on the pass that "

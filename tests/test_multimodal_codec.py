@@ -556,10 +556,12 @@ def test_wav_fixture_roundtrip_sample_exact():
 def test_media_fixture_dirs_build_atomically(tmp_path, monkeypatch):
     import os
 
+    from hadoop_hdfs_spark.fixtures import MARKER, fixture_n_assets, resolve_corpus
+
     monkeypatch.setenv("SPARK_GRAFT_PNG_DIR", str(tmp_path / "nope"))
-    d, n = mediafixture.resolve_png_corpus()
+    d, _, n = resolve_corpus("PNG")
     assert n == 0  # env-pointed missing dir: honest zero, no crash
     monkeypatch.delenv("SPARK_GRAFT_PNG_DIR")
-    d, n = mediafixture.resolve_png_corpus()
-    assert n == mediafixture.fixture_n_assets(0.01)
-    assert os.path.exists(os.path.join(d, ".done"))
+    d, _, n = resolve_corpus("PNG")
+    assert n == fixture_n_assets(0.01)
+    assert os.path.exists(os.path.join(d, MARKER))

@@ -1,15 +1,26 @@
-"""Staging-cache behavior for the streaming certification drains (ADVICE
-r3): the stage key must track fixture CONTENT, so a regenerated fixture at
-the same path restages instead of silently replaying stale bytes; and a
-visible stage directory must always be complete (marker inside before the
-rename into place)."""
+"""Staging-cache behavior of the /tmp artifacts (ADVICE r3): the stage key
+must track fixture CONTENT, so a regenerated fixture at the same path
+restages instead of silently replaying stale bytes; and a visible
+directory must always be complete. Every artifact builds through the one
+primitive, fixtures.build_once (marker inside before the rename into
+place); the failure-injection test drives it through each caller, and an
+AST audit keeps the protocol from being copied again."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
+import pathlib
 import shutil
+import sys
 
+import pytest
+
+from hadoop_hdfs_spark import fixtures
 from hadoop_hdfs_spark.streaming.staging import fixture_fingerprint, staged_dir
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 
 def _mk_fixture(tmp_path, payload: bytes):
@@ -52,25 +63,136 @@ def test_staged_dir_builds_once_then_restages_on_regen(tmp_path):
         shutil.rmtree(s, ignore_errors=True)
 
 
-def test_torn_stage_is_replaced(tmp_path):
-    d = _mk_fixture(tmp_path, b"v1")
+class _Boom(Exception):
+    pass
 
-    def build(p):
-        os.makedirs(p)
-        with open(os.path.join(p, "data"), "w") as f:
-            f.write("built")
 
-    # simulate a crashed build: stage dir exists WITHOUT the marker
-    import hashlib
+def _boom(*_args, **_kwargs):
+    raise _Boom
 
-    key = hashlib.md5(
-        f"{d}|test_torn|{fixture_fingerprint(d)}".encode()
-    ).hexdigest()[:12]
-    torn = f"/tmp/test_torn_{key}"
-    shutil.rmtree(torn, ignore_errors=True)
-    os.makedirs(torn)
-    s = staged_dir(d, "test_torn", build)
-    assert s == torn
-    assert os.path.exists(os.path.join(s, "_STAGED"))
-    assert os.path.exists(os.path.join(s, "data"))
-    shutil.rmtree(s, ignore_errors=True)
+
+def _stage_payload() -> str:
+    return "built"
+
+
+def _caller(name, tmp_path):
+    """(call, arm) for one caller of build_once: ``call()`` builds and
+    returns the directory, ``arm(monkeypatch)`` makes its write raise
+    part-way. The fixture corpora build at a scale factor of their own."""
+    if name == "staged_dir":
+        d = _mk_fixture(tmp_path, b"v1")
+
+        def build(p):
+            os.makedirs(p)
+            with open(os.path.join(p, "data"), "w") as f:
+                f.write(_stage_payload())
+
+        return (
+            lambda: staged_dir(d, "test_torn", build),
+            lambda m: m.setattr(sys.modules[__name__], "_stage_payload", _boom),
+        )
+    if name == "sf1":
+        import bench
+        import duckdb
+
+        from test_bench_fixture import _copy_src
+
+        src = _copy_src(tmp_path)
+        return (
+            lambda: bench._materialize_sf1(src, factor=2),
+            lambda m: m.setattr(duckdb, "connect", _boom),
+        )
+    from hadoop_hdfs_spark.pipeline import gifcodec, mediafixture
+
+    sf = 1e-6
+    if name == "blob":
+        import numpy as np
+
+        return (
+            lambda: fixtures.blob_fixture_dir(sf),
+            lambda m: m.setattr(np.random, "default_rng", _boom),
+        )
+    module, builder, encoder = {
+        "png": (mediafixture, "png_fixture_dir", "png_fixture_bytes"),
+        "wav": (mediafixture, "wav_fixture_dir", "wav_fixture_bytes"),
+        "gif": (gifcodec, "gif_fixture_dir", "fixture_gif_bytes"),
+    }[name]
+    return (
+        lambda: getattr(module, builder)(sf),
+        lambda m: m.setattr(module, encoder, _boom),
+    )
+
+
+@pytest.mark.parametrize(
+    "caller", ["staged_dir", "blob", "png", "wav", "gif", "sf1"]
+)
+def test_torn_or_failed_build_is_never_visible(caller, tmp_path, monkeypatch):
+    """Inject each failure build_once guards against, through every
+    caller: a write that raises part-way, a rename that fails with no
+    complete build in sight, and a torn target left by a crashed build."""
+    call, arm = _caller(caller, tmp_path)
+    target = call()
+    shutil.rmtree(target)
+
+    def leftovers():
+        return glob.glob(f"{glob.escape(target)}.build-*")
+
+    try:
+        with monkeypatch.context() as m:
+            arm(m)
+            with pytest.raises(_Boom):
+                call()
+        assert leftovers() == [] and not os.path.exists(target)
+
+        def no_rename(*_args):
+            raise OSError("rename refused")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", no_rename)
+            m.setattr(fixtures.time, "sleep", lambda _s: None)
+            with pytest.raises(OSError, match="rename refused"):
+                call()
+        assert leftovers() == [] and not os.path.exists(target)
+
+        os.makedirs(target)  # torn: no marker
+        open(os.path.join(target, "partial"), "w").close()
+        assert call() == target
+        names = os.listdir(target)
+        assert fixtures.MARKER in names and "partial" not in names
+        assert len(names) > 1
+        assert leftovers() == []
+    finally:
+        shutil.rmtree(target, ignore_errors=True)
+
+
+def test_only_build_once_renames_a_build_dir():
+    """The build-and-rename protocol has one copy: no function in the
+    package, bench.py or tools/ other than fixtures.build_once moves a
+    ``.build-`` path into place."""
+    paths = [
+        *sorted((ROOT / "hadoop_hdfs_spark").rglob("*.py")),
+        ROOT / "bench.py",
+        *sorted((ROOT / "tools").glob("*.py")),
+    ]
+    found = set()
+    for path in paths:
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(ast.walk(fn))
+            builds = any(
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and ".build-" in n.value
+                for n in nodes
+            )
+            moves = any(
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("rename", "replace", "move")
+                and getattr(n.func.value, "id", None) in ("os", "shutil")
+                for n in nodes
+            )
+            if builds and moves:
+                found.add((path.relative_to(ROOT).as_posix(), fn.name))
+    assert found == {("hadoop_hdfs_spark/fixtures.py", "build_once")}

@@ -25,20 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hadoop_hdfs_spark.blobfixture import blob_fixture_dir  # noqa: E402
-from hadoop_hdfs_spark.pipeline.gifcodec import gif_fixture_dir  # noqa: E402
-from hadoop_hdfs_spark.pipeline.mediafixture import (  # noqa: E402
-    png_fixture_dir,
-    wav_fixture_dir,
-)
-
-_sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-_sf = 0.1 if "sf0.1" in _sf_dir else 0.001
-os.environ.setdefault("SPARK_GRAFT_BLOB_DIR", blob_fixture_dir(_sf))
-os.environ.setdefault("SPARK_GRAFT_GIF_DIR", gif_fixture_dir(_sf))
-os.environ.setdefault("SPARK_GRAFT_PNG_DIR", png_fixture_dir(_sf))
-os.environ.setdefault("SPARK_GRAFT_WAV_DIR", wav_fixture_dir(_sf))
-
+# bench's import builds the corpora for SPARK_GRAFT_SF_DIR's scale factor
+# (bench._parse_sf) and points SPARK_GRAFT_{BLOB,GIF,PNG,WAV}_DIR at them
+# (fixtures.fixture_env), exactly as for the bench itself.
+from bench import _bench_sf_dir as _sf_dir  # noqa: E402
 from hadoop_hdfs_spark import registry  # noqa: E402
 from hadoop_hdfs_spark.plans import formatted_plan  # noqa: E402
 from hadoop_hdfs_spark.session import get_spark  # noqa: E402
