@@ -6,8 +6,9 @@ generated corpora (blob, GIF, PNG, WAV) the data-plane gates read.
 temp dir, the :data:`MARKER` is written INSIDE it, and the dir is renamed
 into place, so a visible directory always holds a complete build. Every
 build-once /tmp directory goes through it: the streaming stages
-(``streaming.staging.staged_dir``), the corpora below and the bench's 10x
-set (``bench._materialize_sf1``).
+(``streaming.staging.staged_dir``), the corpora below, the bench's 10x
+set (``bench._materialize_sf1``) and the driver JVM's class-data-sharing
+archive (``session``).
 
 The blob corpus backs the content-checksum operators (a9b, s1, s5c). It
 has a FIXED byte volume per scale factor (BYTES_PER_SF * sf across

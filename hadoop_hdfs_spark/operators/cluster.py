@@ -333,14 +333,27 @@ FROM (
     "rack is the equi-join + window key; biggest excess meets biggest "
     "deficit), pass 2 rank-pairs the residual unmatched nodes across "
     "racks by descending excess/deficit, union. "
-    "Every frame is cluster-node-sized; both windows partition by rack "
-    "or run over the node-count residual — shuffle-free at node scale "
-    "under AQE broadcast. The original global rank-pairing "
+    "Every frame is cluster-node-sized, so the node-utilization frame is "
+    "built once on ONE partition, the cluster average a window sum over "
+    "it (no cross join against an aggregate); the rack windows, the "
+    "shuffled-hash joins and the residual windows all run on that "
+    "partition without an exchange. The original global rank-pairing "
     "(j4_balancer_pairing) stays registered for comparison.",
 )
 def j4b_balancer_rack_pairing(e) -> DataFrame:
-    u = a8_utilization(e).join(
-        e["datanodes"].select("datanode_id", "rack", "capacity"), "datanode_id"
+    whole = Window.partitionBy()
+    u = (
+        e["datanodes"]
+        .coalesce(1)
+        .select(
+            "datanode_id",
+            "rack",
+            "capacity",
+            (F.col("dfs_used") * 100.0 / F.col("capacity")).alias("utilization"),
+            (
+                F.sum("dfs_used").over(whole) * 100.0 / F.sum("capacity").over(whole)
+            ).alias("avg_utilization"),
+        )
     )
     over = (
         u.filter(F.col("utilization") > F.col("avg_utilization") + 10)
@@ -387,7 +400,7 @@ def j4b_balancer_rack_pairing(e) -> DataFrame:
         )
     )
     same = over.alias("s").join(
-        under.alias("t"),
+        under.alias("t").hint("shuffle_hash"),
         (F.col("s.rack") == F.col("t.rack")) & (F.col("s.rk") == F.col("t.rk")),
     )
     same_rack = same.select(
@@ -398,7 +411,7 @@ def j4b_balancer_rack_pairing(e) -> DataFrame:
     )
     resid_over = (
         over.join(
-            same_rack.select(F.col("source").alias("datanode_id")),
+            same_rack.select(F.col("source").alias("datanode_id")).hint("shuffle_hash"),
             "datanode_id",
             "left_anti",
         )
@@ -411,7 +424,7 @@ def j4b_balancer_rack_pairing(e) -> DataFrame:
     )
     resid_under = (
         under.join(
-            same_rack.select(F.col("target").alias("datanode_id")),
+            same_rack.select(F.col("target").alias("datanode_id")).hint("shuffle_hash"),
             "datanode_id",
             "left_anti",
         )
@@ -423,7 +436,7 @@ def j4b_balancer_rack_pairing(e) -> DataFrame:
         )
     )
     cross_rack = resid_over.alias("s").join(
-        resid_under.alias("t"), F.col("s.rk2") == F.col("t.rk2")
+        resid_under.alias("t").hint("shuffle_hash"), F.col("s.rk2") == F.col("t.rk2")
     ).select(
         F.col("s.datanode_id").alias("source"),
         F.col("t.datanode_id").alias("target"),

@@ -205,6 +205,19 @@ def _corpus_pin_budget() -> int:
         ) from None
 
 
+def _source_bytes(path: str) -> int | None:
+    """On-disk bytes of a parquet source: the file, or every file under a
+    partitioned directory (Spark's own write layout); None if missing."""
+    if os.path.isdir(path):
+        return sum(
+            os.path.getsize(os.path.join(d, n)) for d, _, names in os.walk(path) for n in names
+        )
+    try:
+        return os.path.getsize(path)
+    except OSError:
+        return None  # unknown source (test frames): pin as before
+
+
 def corpus_pin(e: dict, tag: str, thunk, source: str = "documents") -> DataFrame:
     """:func:`eager_cache_thunk` with an explicit executor-storage budget
     for CORPUS-SCALE frames (judge r11 #8).
@@ -216,7 +229,8 @@ def corpus_pin(e: dict, tag: str, thunk, source: str = "documents") -> DataFrame
     held in executor storage per session, and while ``localCheckpoint``'s
     MEMORY_AND_DISK level spills rather than OOMs, a corpus-sized spill
     is still the wrong plan. The guard keys on the SOURCE table's
-    on-disk parquet size (cheap, no job): at or under
+    on-disk parquet size, a file or the sum over a partitioned directory
+    (cheap, no job): at or under
     SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES (default 256 MiB — far above the
     fixtures, far below production) the frame pins exactly as before;
     past it the raw derivation is returned and every consumer recomputes
@@ -225,11 +239,7 @@ def corpus_pin(e: dict, tag: str, thunk, source: str = "documents") -> DataFrame
     query touches instead of holding the corpus exploded in RAM)."""
     if _PIN_MODE == "off":  # plan inspection bypasses pins entirely
         return thunk()
-    sf_dir = str(e.get("__sf_dir__", "?"))
-    try:
-        src_bytes = os.path.getsize(os.path.join(sf_dir, f"{source}.parquet"))
-    except OSError:
-        src_bytes = None  # unknown source (test frames): pin as before
+    src_bytes = _source_bytes(os.path.join(str(e.get("__sf_dir__", "?")), f"{source}.parquet"))
     if src_bytes is not None and src_bytes > _corpus_pin_budget():
         return thunk()
     return eager_cache_thunk(e, tag, thunk)

@@ -9,13 +9,65 @@ real multi-executor cluster at 100 TB scale:
 - Arrow enabled so any Pandas-UDF path is batch-vectorized, never per-row;
 - broadcast threshold left at default 10 MB — dimension tables (datanodes,
   region/nation, leases) broadcast automatically.
+
+The driver JVM starts from a class-data-sharing archive (CDS, JEP 350): a
+file of pre-parsed, pre-verified class metadata that the JVM maps at start
+instead of loading and verifying Spark's classes from its jars, which is
+most of the cost of a cold start and of the first actions after it. It
+plays the part of the reference's fsimage, which a NameNode loads at start
+instead of replaying its history. The archive is keyed on everything the
+JVM validates it against: ``$JAVA_HOME/release``, the paths, sizes and
+mtimes of ``$SPARK_HOME/jars/*.jar`` and ``spark.driver.memory``. It lives
+in ``/tmp/spark_graft_cds_<key>/driver.jsa``:
+
+- when that archive is there, the JVM maps it (``-XX:SharedArchiveFile``);
+- otherwise the JVM records every class it loaded into a pid-unique
+  ``/tmp/spark_graft_cds_<key>.rec-<pid>-<n>.jsa`` when it exits
+  (``-XX:ArchiveClassesAtExit``, about 170 MB and 15 s of exit), unless
+  another recording for the key is still being written. A later start
+  promotes a finished recording through :func:`fixtures.build_once` once
+  the recording JVM is gone and a trial ``java -Xshare:on -version`` maps
+  it on the class path that JVM reported; a recording that fails the
+  trial is deleted. A truncated archive makes a JVM abort at start, so no
+  other file ever reaches ``-XX:SharedArchiveFile``.
+
+JDK 17 records nothing while a non-empty directory is on the class path,
+and Spark's launcher puts the conf directory there. When the effective
+conf directory (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``) is missing
+or holds only ``*.template`` files, which Spark never reads,
+``SPARK_CONF_DIR`` is pointed at the empty ``/tmp/spark_graft_cds_conf``.
+If it holds a real file, or another directory may join the class path
+(``SPARK_CLASSPATH``, ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``,
+``SPARK_DIST_CLASSPATH``), or the caller sets
+``spark.driver.defaultJavaOptions`` (the option the flags travel in,
+placed before any ``extraJavaOptions``), no CDS option is passed and the
+environment is left alone: the JVM launches as it would without archives.
+Delete the directory and any ``.rec-*`` files to drop the archive.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import itertools
+import json
 import os
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
+
+from .fixtures import MARKER, build_once
+
+# where the archive, its recordings and the empty conf directory live
+_CDS_ROOT = "/tmp"
+_CDS_ARCHIVE = "driver.jsa"
+# a recording run stays silent: a benchmark's last stdout line is its result
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+# class-path sources besides the conf directory that Spark's launcher reads
+_CLASS_PATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+_recording_ids = itertools.count()
 
 
 def get_spark(
@@ -38,6 +90,13 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             repo_root + (os.pathsep + existing if existing else "")
         )
+    # Escape hatch for tuning experiments / deployment-specific overrides:
+    # "k=v;k2=v2" applied last, so it can override any default below.
+    overrides = {}
+    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
+        k, _, v = kv.partition("=")
+        overrides[k.strip()] = v.strip()
+    memory = overrides.get("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -65,16 +124,185 @@ def get_spark(
         # fixture events.parquet stores TIMESTAMP(NANOS); Spark 4 needs this
         # to read it (as a BIGINT nanos column)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
     )
-    # Escape hatch for tuning experiments / deployment-specific overrides:
-    # "k=v;k2=v2" applied last, so it can override any default above.
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, extra.split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+    for k, v in overrides.items():
+        builder = builder.config(k, v)
+    recording = None
+    if _launches_jvm() and "spark.driver.defaultJavaOptions" not in overrides:
+        # Spark puts these options before any extraJavaOptions
+        cds = _cds_options(memory)
+        if cds is not None:
+            options, recording = cds
+            builder = builder.config("spark.driver.defaultJavaOptions", options)
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        if recording is not None:
+            _remove(recording + ".json")
+        raise
+    if recording is not None:
+        jvm = spark.sparkContext._jvm
+        _write_json(recording + ".json", {
+            "owner_pid": os.getpid(),
+            "jvm_pid": int(jvm.java.lang.ProcessHandle.current().pid()),
+            "class_path": jvm.java.lang.System.getProperty("java.class.path"),
+        })
+    return spark
+
+
+def _launches_jvm() -> bool:
+    """Whether ``getOrCreate`` is about to start a driver JVM: PySpark
+    keeps one gateway per process, and a gateway port in the environment
+    means the caller started the JVM."""
+    from pyspark import SparkContext
+
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
+def _spark_home() -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return _find_spark_home()
+
+
+def _java_home() -> str | None:
+    """The JDK Spark's launcher runs: ``$JAVA_HOME``, else ``java`` on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        return os.environ["JAVA_HOME"]
+    java = shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def _cds_key(memory: str) -> str | None:
+    """Hash of what the JVM validates an archive against: the JDK release,
+    the jars' paths, sizes and mtimes, and the heap size. None when there
+    is no JDK release file to key on."""
+    h = hashlib.sha256()
+    try:
+        with open(os.path.join(_java_home() or "", "release"), "rb") as f:
+            h.update(f.read())
+        for jar in sorted(glob.glob(os.path.join(glob.escape(_spark_home()), "jars", "*.jar"))):
+            st = os.stat(jar)
+            h.update(f"{jar}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    h.update(memory.encode())
+    return h.hexdigest()[:16]
+
+
+def _cds_conf_dir() -> str | None:
+    """The empty directory that stands in for Spark's conf directory, or
+    None when a real file or another source may put a non-empty
+    directory on the class path."""
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_spark_home(), "conf")
+    try:
+        names = os.listdir(conf)
+    except FileNotFoundError:
+        names = []
+    except OSError:
+        return None
+    if any(not n.endswith(".template") for n in names):
+        return None
+    if any(os.environ.get(v) for v in _CLASS_PATH_ENV):
+        return None
+    empty = os.path.join(_CDS_ROOT, "spark_graft_cds_conf")
+    os.makedirs(empty, exist_ok=True)
+    return None if os.listdir(empty) else empty
+
+
+def _cds_options(memory: str) -> tuple[str, str | None] | None:
+    """(driver JVM options, the recording they start or None), or None
+    for a start without an archive. Promotes a finished recording first."""
+    conf = _cds_conf_dir()
+    key = conf and _cds_key(memory)
+    if not key:
+        return None
+    stem = os.path.join(_CDS_ROOT, f"spark_graft_cds_{key}")
+    marker = os.path.join(stem, MARKER)
+    busy = not os.path.exists(marker) and _promote(stem, memory)
+    if os.path.exists(marker):
+        options, recording = f"-XX:SharedArchiveFile={os.path.join(stem, _CDS_ARCHIVE)}", None
+    elif busy:  # one recording per key at a time; this start runs without
+        return None
+    else:
+        recording = f"{stem}.rec-{os.getpid()}-{next(_recording_ids)}"
+        _write_json(recording + ".json", {"owner_pid": os.getpid()})
+        options = f"-XX:ArchiveClassesAtExit={recording}.jsa"
+    os.environ["SPARK_CONF_DIR"] = conf
+    return f"{options} {_CDS_QUIET}", recording
+
+
+def _promote(stem: str, memory: str) -> bool:
+    """Promote the first finished recording of ``stem`` that a trial JVM
+    maps into ``stem``'s archive, and delete every finished recording.
+    Returns whether a recording is still being written."""
+    busy = False
+    for side in sorted(glob.glob(glob.escape(stem) + ".rec-*.json")):
+        rec = side[: -len(".json")] + ".jsa"
+        try:
+            with open(side) as f:
+                info = json.load(f)
+        except (OSError, ValueError):
+            info = {}
+        pid = info.get("jvm_pid", info.get("owner_pid"))
+        if pid is not None and _running(pid):
+            busy = True
+            continue
+        if (
+            not os.path.exists(os.path.join(stem, MARKER))
+            and os.path.exists(rec)
+            and "class_path" in info
+            and _trial(rec, info["class_path"], memory)
+        ):
+
+            def write(p: str) -> None:
+                os.makedirs(p)
+                os.rename(rec, os.path.join(p, _CDS_ARCHIVE))
+
+            with contextlib.suppress(FileNotFoundError):
+                build_once(stem, write)  # a concurrent promoter took ``rec``
+        _remove(rec)
+        _remove(side)
+    return busy
+
+
+def _trial(rec: str, class_path: str, memory: str) -> bool:
+    """Whether a JVM with the driver's heap, on the class path the
+    recording JVM reported, starts with ``rec`` mapped."""
+    java = os.path.join(_java_home() or "", "bin", "java")
+    # a bad archive aborts the JVM: leave no crash log in the caller's cwd
+    cmd = [java, "-Xshare:on", f"-XX:SharedArchiveFile={rec}", f"-Xmx{memory}",
+           "-XX:ErrorFile=/dev/null", "-XX:-CreateCoredumpOnCrash",
+           "-cp", class_path, "-version"]
+    try:
+        done = subprocess.run(cmd, stdout=subprocess.DEVNULL,
+                              stderr=subprocess.DEVNULL, timeout=120)
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return done.returncode == 0
+
+
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process
+        pass
+    return True
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def fan_out(df):

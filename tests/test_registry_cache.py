@@ -206,6 +206,20 @@ def test_corpus_pin_budget_guard(monkeypatch, tmp_path):
     d = registry.corpus_pin(e, "tag_under", thunk)
     assert len(calls) == 1 and c is d
 
+    # a partitioned directory source counts its files' bytes, not the
+    # directory entry's own size (4096 on ext4)
+    part_dir = tmp_path / "sharded.parquet"
+    part_dir.mkdir()
+    budget = max(8192, os.path.getsize(part_dir))
+    for i in range(2):
+        (part_dir / f"part-{i:05d}.parquet").write_bytes(b"x" * budget)
+    monkeypatch.setenv("SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES", str(budget))
+    calls.clear()
+    f = registry.corpus_pin(e, "tag_dir", thunk, source="sharded")
+    g = registry.corpus_pin(e, "tag_dir", thunk, source="sharded")
+    assert len(calls) == 2 and f is not g
+    assert not any(k[2] == "tag_dir" for k in registry._CACHED)
+
     # malformed budget: named error, not a bare ValueError
     monkeypatch.setenv("SPARK_GRAFT_CORPUS_PIN_BUDGET_BYTES", "huge")
     with pytest.raises(ValueError, match="SPARK_GRAFT_CORPUS_PIN_BUDGET"):
