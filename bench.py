@@ -275,7 +275,7 @@ def main() -> None:
 def _sf1_dir_for(src_dir: str, factor: int = 10) -> str:
     import hashlib
 
-    from hadoop_hdfs_spark.streaming.staging import fixture_fingerprint
+    from hadoop_hdfs_spark.fixtures import fixture_fingerprint
 
     # stable source prefix + content suffix: the prefix lets a rebuild for
     # a REGENERATED fixture find (and prune) its predecessor's multi-GB

@@ -32,12 +32,34 @@ Mapping (all arithmetic-deterministic, no randomness):
 Timestamps are modeled as epoch-millisecond BIGINTs (``*_ms`` columns): the
 reference itself stores epoch-millis longs (HdfsFileStatus.java:144-156), and
 integer columns hash identically across engines.
+
+The entity image. A NameNode does not rebuild its namespace at every
+start: it loads the fsimage and saves a new one at each checkpoint
+(FSImageFormat.java:130,584-608). Spark does the same here. The first
+:func:`load_entities` for a fixture's content derives the entities with
+``spark.sql`` and writes them to a parquet image (:func:`entity_image`):
+one sub-directory per entity plus ``_SCHEMAS.json``, the Spark schema of
+every entity and every base table. Every load, the first included, then
+reads the image and the fixture files with those stored schemas, so it
+starts no Spark job (no schema inference, no derivation). The image is
+keyed on the fixture content, on every ``ENTITY_SQL`` statement and on
+the pyspark version; it is checked once, at build, for the data
+invariants the queries' fast paths rely on (:func:`check_invariants`).
+The DuckDB oracle still derives from :func:`oracle_prelude`, so the
+image-backed entities are checked against an independent engine.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .fixtures import entities_sql_version, staged_dir
 
 # "now" for liveness checks: 2024-01-02T00:00:00Z.
 NOW_MS = 1_704_153_600_000
@@ -521,7 +543,7 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     TIMESTAMP_NTZ).  All downstream bucketing is integer nanosecond math
     (``ts div 60e9``) and the DuckDB oracles use ``epoch_ns(ts)``, which
     treats a naive timestamp as UTC wall-clock — so the NTZ value is cast
-    under a UTC session timezone (set in :func:`register_base_tables`) to
+    under a UTC session timezone (set in :func:`set_session_confs`) to
     make the two engines agree on the instant.  Works on both batch and
     streaming frames (pure column expressions, no actions).
     """
@@ -535,8 +557,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", (F.unix_micros(col) * F.lit(1000)).cast("long"))
 
 
-def register_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register the fixture parquet tables as temp views; return them."""
+def set_session_confs(spark: SparkSession) -> None:
+    """The runtime confs every query relies on, set on ``spark``."""
     # Older fixture generations store events.ts as TIMESTAMP(NANOS), which
     # Spark 4 only reads under this (runtime-settable) flag.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -558,9 +580,24 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
     spark.conf.set(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
     )
+
+
+def register_base_tables(
+    spark: SparkSession, sf_dir: str, schemas: dict[str, StructType] | None = None
+) -> dict[str, DataFrame]:
+    """Set :func:`set_session_confs`, register the fixture parquet tables
+    as temp views and return them.
+
+    ``schemas`` maps each table to its parquet schema as Spark reads it
+    (the entity image stores them); a table read with its schema skips
+    Spark's per-file schema-inference job."""
+    set_session_confs(spark)
     out = {}
     for name in BASE_TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        reader = spark.read
+        if schemas is not None:
+            reader = reader.schema(schemas[name])
+        df = reader.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events":
             df = normalize_event_ts(df)
         df.createOrReplaceTempView(name)
@@ -568,22 +605,113 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
     return out
 
 
-def load_entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Materialize the HDFS entity model as temp views + DataFrames.
+class EntityInvariantError(ValueError):
+    """A derived entity breaks a data invariant a query's fast path needs."""
 
-    Runs the shared SQL through Spark's own parser so the Spark plan and the
-    DuckDB oracle are built from identical text. The returned dict also
-    carries the base fixture tables (documents, embeddings, ...) so pipeline
-    operators can reach them.
-    """
-    out = dict(register_base_tables(spark, sf_dir))
+
+def check_invariants(e: dict[str, DataFrame]) -> None:
+    """Raise :class:`EntityInvariantError` unless the replica invariants
+    hold: ``(block_id, datanode_id)`` is unique in ``replicas``
+    (``j2_report_diff``'s zero-exchange map) and every replica's block is
+    in ``blocks`` (``j11_read_locality`` reads only the replica scan)."""
+    replicas = e["replicas"]
+    dup = (
+        replicas.groupBy("block_id", "datanode_id")
+        .count()
+        .filter("count > 1")
+        .first()
+    )
+    if dup is not None:
+        raise EntityInvariantError(
+            f"replicas: (block_id, datanode_id) is not unique: {dup}"
+        )
+    orphan = replicas.join(e["blocks"], "block_id", "left_anti").first()
+    if orphan is not None:
+        raise EntityInvariantError(f"replicas: block_id not in blocks: {orphan}")
+
+
+_SCHEMAS = "_SCHEMAS.json"
+_IMAGE_VERSION = 1  # the image layout; a bump rebuilds every image
+
+
+def derive_entities(
+    spark: SparkSession, sf_dir: str, schemas: dict[str, StructType] | None = None
+) -> dict[str, DataFrame]:
+    """Derive the entity model from the fixture tables: every
+    ``ENTITY_SQL`` statement through Spark's own parser, in order, each
+    ``.cache()``d and registered as a temp view, so the Spark plan and the
+    DuckDB oracle are built from identical text. Returns the base tables,
+    the entities and ``__sf_dir__``. The image build writes these frames;
+    the query manifest fingerprints plans over them, so a fingerprint
+    covers each entity's derivation, not only a scan of the image."""
+    out = dict(register_base_tables(spark, sf_dir, schemas))
     out["__sf_dir__"] = sf_dir
     for name, sql in ENTITY_SQL.items():
-        # Entity tables are the *metadata* model (namespace/node-scale, not
-        # data-scale) — the hot dimensions every query joins. Caching them
-        # is the FSImage-in-RAM analog and shares the derivation across the
-        # whole query suite.
         df = spark.sql(sql).cache()
+        df.createOrReplaceTempView(name)
+        out[name] = df
+    return out
+
+
+def entity_image(spark: SparkSession, sf_dir: str) -> str:
+    """Return the entity image directory of ``sf_dir``, building it on the
+    first call for this fixture content, ``ENTITY_SQL`` and pyspark.
+
+    The build runs :func:`derive_entities`, writes each entity with
+    ``df.write.parquet`` into ``<image>/<entity>``, checks
+    :func:`check_invariants` and writes ``_SCHEMAS.json`` (table or
+    entity name -> Spark schema); it publishes through
+    ``fixtures.staged_dir``, so a build that raises leaves no image. It
+    leaves the derived frames registered as temp views."""
+
+    def write(path: str) -> None:
+        set_session_confs(spark)  # events.ts is read under nanosAsLong
+        base = {
+            name: spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            for name in BASE_TABLES
+        }
+        e = derive_entities(spark, sf_dir, base)
+        try:
+            for name in ENTITY_SQL:
+                e[name].write.parquet(os.path.join(path, name))
+            check_invariants(e)
+        finally:
+            for name in ENTITY_SQL:
+                e[name].unpersist()
+        schemas = {**base, **{name: e[name].schema for name in ENTITY_SQL}}
+        with open(os.path.join(path, _SCHEMAS), "w") as f:
+            json.dump({n: s.jsonValue() for n, s in schemas.items()}, f)
+
+    tag = (
+        f"spark_graft_entities_v{_IMAGE_VERSION}_{entities_sql_version()}"
+        f"_pyspark{pyspark.__version__}"
+    )
+    return staged_dir(sf_dir, tag, write)
+
+
+def load_entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Register the HDFS entity model as temp views + DataFrames, read from
+    the entity image (:func:`entity_image`, built on first use).
+
+    The base tables and the entities are read with the image's stored
+    schemas, so on a built image this starts no Spark job. Every entity
+    is ``.cache()``d: the entities are the *metadata* model
+    (namespace/node-scale, not data-scale), the hot dimensions every
+    query joins — the FSImage-in-RAM analog. The returned dict also
+    carries the base fixture tables (documents, embeddings, ...) so
+    pipeline operators can reach them, and ``__sf_dir__``.
+    """
+    image = entity_image(spark, sf_dir)
+    with open(os.path.join(image, _SCHEMAS)) as f:
+        schemas = {n: StructType.fromJson(s) for n, s in json.load(f).items()}
+    out = dict(register_base_tables(spark, sf_dir, schemas))
+    out["__sf_dir__"] = sf_dir
+    for name in ENTITY_SQL:
+        df = (
+            spark.read.schema(schemas[name])
+            .parquet(os.path.join(image, name))
+            .cache()
+        )
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

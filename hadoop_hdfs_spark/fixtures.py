@@ -1,14 +1,22 @@
-"""Deterministic /tmp artifacts: the one build-once primitive and the four
+"""Deterministic /tmp artifacts: the one build-once primitive, the keys
+of the artifacts derived from a fixture directory, and the four
 generated corpora (blob, GIF, PNG, WAV) the data-plane gates read.
 
 :func:`build_once` follows the checkpoint rule of the reference (write
 ``fsimage.ckpt``, rename it into place): a build goes into a pid-suffixed
 temp dir, the :data:`MARKER` is written INSIDE it, and the dir is renamed
 into place, so a visible directory always holds a complete build. Every
-build-once /tmp directory goes through it: the streaming stages
-(``streaming.staging.staged_dir``), the corpora below, the bench's 10x
-set (``bench._materialize_sf1``) and the driver JVM's class-data-sharing
+build-once /tmp directory goes through it: the entity image
+(``entities.entity_image``), the streaming stages and the IVF-PQ index
+(:func:`staged_dir`), the corpora below, the bench's 10x set
+(``bench._materialize_sf1``) and the driver JVM's class-data-sharing
 archive (``session``).
+
+An artifact derived from a fixture directory is keyed on its content
+(:func:`fixture_fingerprint`) and, when it reads the entity model, on
+every entity derivation (:func:`entities_sql_version`), so a regenerated
+fixture or an edited entity gets a fresh directory instead of stale
+bytes (ADVICE r3, r6).
 
 The blob corpus backs the content-checksum operators (a9b, s1, s5c). It
 has a FIXED byte volume per scale factor (BYTES_PER_SF * sf across
@@ -91,6 +99,46 @@ def build_once(d: str, write: Callable[[str], None]) -> str:
     if not os.path.exists(done):
         raise err
     return d
+
+
+def fixture_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of a fixture directory: every parquet file's
+    (name, size, mtime_ns), hashed. Touching or regenerating any fixture
+    file changes the fingerprint and therefore the stage path."""
+    h = hashlib.md5()
+    for name in sorted(os.listdir(sf_dir)):
+        if not name.endswith(".parquet"):
+            continue
+        st = os.stat(os.path.join(sf_dir, name))
+        h.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return h.hexdigest()[:12]
+
+
+def entities_sql_version() -> str:
+    """6-hex digest of EVERY entity derivation SQL statement. Artifacts
+    derived from the entity model, keyed only on the fixture-file
+    fingerprint (or on their direct entity's SQL), would replay STALE
+    bytes when an upstream entity derivation changes — the drain then
+    certifies old rows against a freshly-derived oracle (the hftp
+    lesson, ADVICE r6, one level up). Hashing the whole dict
+    over-invalidates (any entity edit rebuilds every artifact), which is
+    the cheap direction: each is a one-time cached build."""
+    from .entities import ENTITY_SQL
+
+    h = hashlib.md5(
+        "|".join(f"{k}={v}" for k, v in sorted(ENTITY_SQL.items())).encode()
+    )
+    return h.hexdigest()[:6]
+
+
+def staged_dir(sf_dir: str, tag: str, build: Callable[[str], None]) -> str:
+    """Return ``/tmp/<tag>_<key>`` for (sf_dir, tag), building it at most
+    once per fixture content version. ``build(path)`` must create ``path``
+    and fill it (Spark's ``.write.parquet(path)`` qualifies)."""
+    key = hashlib.md5(
+        f"{sf_dir}|{tag}|{fixture_fingerprint(sf_dir)}".encode()
+    ).hexdigest()[:12]
+    return build_once(f"/tmp/{tag}_{key}", build)
 
 
 def blob_fixture_dir(sf: float) -> str:

@@ -224,7 +224,7 @@ def _hftp_fixture(inodes: DataFrame, sf_dir: str) -> str:
     import tempfile
 
     from .entities import ENTITY_SQL
-    from .streaming.staging import fixture_fingerprint
+    from .fixtures import fixture_fingerprint
 
     code_ver = hashlib.md5(
         (ENTITY_SQL["inodes"] + inspect.getsource(write_hftp_listing)).encode()

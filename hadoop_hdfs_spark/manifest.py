@@ -170,14 +170,22 @@ def compute_fingerprints(spark) -> dict[str, str]:
     cached frame is now caught by the plan component, not only the result
     hash. Execution (the result-hash toPandas) simply rebuilds uncached —
     identical values, and cheap at the pinned sf0.001.
+
+    Queries are built over the DERIVED entity model
+    (``entities.derive_entities``), not the parquet image the runtime
+    reads: over the image every entity is a bare scan, so the plan would
+    no longer carry the entity derivations and an ``ENTITY_SQL`` edit
+    that leaves the sf0.001 results unchanged would touch no query.
     """
     from . import registry
+    from .entities import derive_entities
 
     registry._import_operator_modules()
     out: dict[str, str] = {}
     app = spark.sparkContext.applicationId
+    e = derive_entities(spark, FINGERPRINT_SF_DIR)
     for name, q in registry._REGISTRY.items():
-        df = q.fn(registry._entities(spark, FINGERPRINT_SF_DIR))
+        df = q.fn(e)
         spark.catalog.clearCache()  # render plans cache-free (see above)
         # clearCache unpersists but the eager-cache memo still holds the
         # frames; left in place, a memo HIT returns an unpersisted frame

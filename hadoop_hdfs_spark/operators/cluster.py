@@ -224,13 +224,28 @@ JOIN (
     doc="J4 balancer source->target pairing (Balancer.chooseNodes:884-925): "
     "rank the over-utilized by descending utilization and the "
     "under-utilized ascending, pair by rank, move min(excess, deficit). "
-    "The reference's greedy same-rack-first refinement is sequential; the "
-    "rank-pairing declarative form keeps the plan shuffle-free at node "
-    "scale (the frames are node-count-sized).",
+    "The reference's greedy same-rack-first refinement is sequential "
+    "(j4b_balancer_rack_pairing models it). Every frame is "
+    "cluster-node-sized, so each branch computes the node-utilization "
+    "frame on ONE partition of the cached datanodes, the cluster average "
+    "a window sum over it (no cross join against an aggregate); both "
+    "rank windows and the shuffled-hash rank join run on that partition "
+    "without an exchange.",
 )
 def j4_balancer_pairing(e) -> DataFrame:
-    u = a8_utilization(e).join(
-        e["datanodes"].select("datanode_id", "rack", "capacity"), "datanode_id"
+    whole = Window.partitionBy()
+    u = (
+        e["datanodes"]
+        .coalesce(1)
+        .select(
+            "datanode_id",
+            "rack",
+            "capacity",
+            (F.col("dfs_used") * 100.0 / F.col("capacity")).alias("utilization"),
+            (
+                F.sum("dfs_used").over(whole) * 100.0 / F.sum("capacity").over(whole)
+            ).alias("avg_utilization"),
+        )
     )
     over = (
         u.filter(F.col("utilization") > F.col("avg_utilization") + 10)
@@ -266,7 +281,7 @@ def j4_balancer_pairing(e) -> DataFrame:
             "rk",
         )
     )
-    return over.join(under, "rk").select(
+    return over.join(under.hint("shuffle_hash"), "rk").select(
         "source",
         "target",
         F.least("excess_bytes", "deficit_bytes").alias("bytes_to_move"),

@@ -379,7 +379,7 @@ def s_knn_ivfpq_at_rest(e) -> DataFrame:
 
 
 def _ivfpq_recall_at_rest(e) -> DataFrame:
-    from ..streaming.staging import entities_sql_version, staged_dir
+    from ..fixtures import entities_sql_version, staged_dir
 
     xe = _quantized_vecs(e)
     spark = xe.sparkSession

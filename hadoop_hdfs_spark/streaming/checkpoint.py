@@ -134,7 +134,7 @@ def t2c_checkpoint_replay(e) -> DataFrame:
         from ..sources import save_edits
         from .drain import rows_per_batch, shuffle_partitions, state_partitions
         from .replay import load_latest_snapshot, replay_edits_stream
-        from .staging import entities_sql_version, staged_dir
+        from ..fixtures import entities_sql_version, staged_dir
 
         sf_dir = str(e["__sf_dir__"])
         # v2: the stage layout depends on save_edits' ordered-mtime stamp

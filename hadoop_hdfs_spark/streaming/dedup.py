@@ -70,8 +70,8 @@ def _stage_documents(e) -> str:
     """Stage the documents fixture as ONE parquet file in /tmp so the
     availableNow drain is a single micro-batch (every duplicate meets its
     original in state; nothing is split across batch boundaries). Keyed on
-    fixture content, built atomically (staging.staged_dir)."""
-    from .staging import entities_sql_version, staged_dir
+    fixture content, built atomically (fixtures.staged_dir)."""
+    from ..fixtures import entities_sql_version, staged_dir
 
     return staged_dir(
         str(e["__sf_dir__"]),

@@ -110,8 +110,8 @@ def _stage_edits(e) -> str:
     read and discard ~85% of its input every drain (the production
     equivalent: partition the changelog by opcode and subscribe to the two
     partitions the join consumes). Keyed on fixture content, built
-    atomically (staging.staged_dir)."""
-    from .staging import entities_sql_version, staged_dir
+    atomically (fixtures.staged_dir)."""
+    from ..fixtures import entities_sql_version, staged_dir
 
     return staged_dir(
         str(e["__sf_dir__"]),

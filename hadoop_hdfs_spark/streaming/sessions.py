@@ -81,13 +81,13 @@ def _stage_with_sentinel(sf_dir: str) -> str:
     The sentinel preserves the source file's EXACT arrow schema (fixture
     generations vary between timestamp[ns] and timestamp[us] physical
     types) so the declared readStream schema reads both files. Keyed on
-    fixture content, built atomically (staging.staged_dir).
+    fixture content, built atomically (fixtures.staged_dir).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .staging import entities_sql_version, staged_dir
+    from ..fixtures import entities_sql_version, staged_dir
 
     src = f"{sf_dir.rstrip('/')}/events.parquet"
 

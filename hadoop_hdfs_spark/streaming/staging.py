@@ -12,11 +12,12 @@ Two hazards with a naive path-keyed cache (ADVICE r3):
    every fixture parquet) into the stage key, so regeneration gets a fresh
    stage directory automatically.
 2. *Torn stages*: marker-after-write is not atomic under concurrent runs.
-   Fix: :func:`staged_dir` builds through ``fixtures.build_once``, the one
-   build-once primitive of every /tmp artifact: a pid-suffixed temp dir
-   gets the ``_STAGED`` marker INSIDE it and is renamed into place, so a
-   visible stage always carries a complete marker, a failed build leaves
-   nothing behind, and the loser of a rename race discards its build.
+   Fix: ``fixtures.staged_dir`` builds through ``fixtures.build_once``,
+   the one build-once primitive of every /tmp artifact: a pid-suffixed
+   temp dir gets the ``_STAGED`` marker INSIDE it and is renamed into
+   place, so a visible stage always carries a complete marker, a failed
+   build leaves nothing behind, and the loser of a rename race discards
+   its build.
 """
 
 from __future__ import annotations
@@ -29,49 +30,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..fixtures import build_once
+from ..fixtures import entities_sql_version, staged_dir
 
 _LAYOUT = "_LAYOUT.json"  # a windowed stage's layout values, beside the marker
-
-
-def entities_sql_version() -> str:
-    """6-hex digest of EVERY entity derivation SQL statement. Staged
-    fixtures derive from the entity model, so a stage keyed only on the
-    fixture-file fingerprint (or on its direct entity's SQL) replays
-    STALE bytes when an upstream entity derivation changes — the drain
-    then certifies old rows against a freshly-derived oracle (the hftp
-    lesson, ADVICE r6, one level up). Hashing the whole dict
-    over-invalidates (any entity edit restages every gate), which is the
-    cheap direction: staging is a one-time cached build."""
-    from ..entities import ENTITY_SQL
-
-    h = hashlib.md5(
-        "|".join(f"{k}={v}" for k, v in sorted(ENTITY_SQL.items())).encode()
-    )
-    return h.hexdigest()[:6]
-
-
-def fixture_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of a fixture directory: every parquet file's
-    (name, size, mtime_ns), hashed. Touching or regenerating any fixture
-    file changes the fingerprint and therefore the stage path."""
-    h = hashlib.md5()
-    for name in sorted(os.listdir(sf_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        st = os.stat(os.path.join(sf_dir, name))
-        h.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:12]
-
-
-def staged_dir(sf_dir: str, tag: str, build: Callable[[str], None]) -> str:
-    """Return a staged directory for (sf_dir, tag), building it at most
-    once per fixture content version. ``build(path)`` must create ``path``
-    and fill it (Spark's ``.write.parquet(path)`` qualifies)."""
-    key = hashlib.md5(
-        f"{sf_dir}|{tag}|{fixture_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return build_once(f"/tmp/{tag}_{key}", build)
 
 
 def write_windowed_stage(stage, pdf, schema, batch, sentinel_row) -> None:

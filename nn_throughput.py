@@ -44,8 +44,8 @@ def main() -> None:
     from hadoop_hdfs_spark import registry
 
     # registry._entities memoizes: the t6 call below goes through the same
-    # path, so loading via load_entities here would derive and pin a
-    # SECOND copy of every entity frame
+    # path, so loading via load_entities here would read and register a
+    # SECOND set of entity frames
     e = registry._entities(spark, sf_dir)
     inodes = e["inodes"]
     inodes.count()  # warm the cached entity (fsimage load, untimed)

@@ -148,15 +148,13 @@ def test_cached_windowed_stage_costs_no_collect(spark, sf_dir, monkeypatch):
     from hadoop_hdfs_spark import registry
     from hadoop_hdfs_spark.streaming import staging
 
-    real_fp, real_staged = staging.fixture_fingerprint, staging.staged_dir
-    fresh, stages = uuid.uuid4().hex, []
-    monkeypatch.setattr(
-        staging, "fixture_fingerprint", lambda d: real_fp(d) + fresh
-    )
+    real_staged = staging.staged_dir
+    fresh, stages = uuid.uuid4().hex[:8], []
     monkeypatch.setattr(
         staging,
         "staged_dir",
-        lambda *a: stages.append(real_staged(*a)) or stages[-1],
+        lambda d, tag, build: stages.append(real_staged(d, tag + fresh, build))
+        or stages[-1],
     )
     frame_cls = type(registry._entities(spark, sf_dir)["lease_events"])
     real_to_pandas, collects = frame_cls.toPandas, []

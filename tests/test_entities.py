@@ -306,3 +306,168 @@ def test_token_ops_entity_invariants(spark, sf_dir, entities):
     assert refs.filter(F.col("op") == "OP_RENEW_DELEGATION_TOKEN").count() > 0
     assert refs.filter(F.col("op") == "OP_CANCEL_DELEGATION_TOKEN").count() > 0
     assert t.filter(F.col("token_seq").isNull()).count() > 0
+
+
+# --- the entity image -------------------------------------------------------
+
+
+def _copy_fixture(sf_dir, dst, supplier_rows: int | None = None) -> str:
+    """A copy of the fixture tables under ``dst`` (fresh mtimes, so a fresh
+    image key); ``supplier_rows`` grows the supplier table to that many
+    rows, cycling the real ones under new keys."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(dst)
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet"):
+            shutil.copy(os.path.join(sf_dir, name), dst)
+    if supplier_rows is not None:
+        path = os.path.join(dst, "supplier.parquet")
+        table = pq.read_table(path)
+        rows = table.to_pylist()
+        grown = [
+            {**rows[k % len(rows)], "s_suppkey": k} for k in range(supplier_rows)
+        ]
+        pq.write_table(pa.Table.from_pylist(grown, schema=table.schema), path)
+    return str(dst)
+
+
+def _image_dirs(m) -> list[str]:
+    """Record every directory fixtures.build_once is asked for."""
+    from hadoop_hdfs_spark import fixtures
+
+    real, seen = fixtures.build_once, []
+
+    def recording(d, write):
+        seen.append(d)
+        return real(d, write)
+
+    m.setattr(fixtures, "build_once", recording)
+    return seen
+
+
+def test_load_from_built_image_starts_no_job(spark, sf_dir, entities):
+    """On a built image, load_entities reads every base table and entity
+    with its stored schema: no schema-inference job, no derivation. The
+    job group sees a plain parquet read's inference job, so it counts."""
+    import uuid
+
+    sc = spark.sparkContext
+    load, control = uuid.uuid4().hex, uuid.uuid4().hex
+    try:
+        sc.setJobGroup(load, "load_entities on a built image")
+        e = load_entities(spark, sf_dir)
+        sc.setJobGroup(control, "a parquet read that infers its schema")
+        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(load) == []
+    assert len(tracker.getJobIdsForGroup(control)) > 0
+    assert set(ENTITY_SQL) <= set(e)
+
+
+def test_image_matches_derived_schema(spark, entities):
+    """Each image-backed entity has the column names and types that
+    deriving it with spark.sql gives (parquet reads every column as
+    nullable, so nullability is not compared)."""
+    for name, sql in ENTITY_SQL.items():
+        derived = [(f.name, f.dataType) for f in spark.sql(sql).schema]
+        image = [(f.name, f.dataType) for f in entities[name].schema]
+        assert image == derived, name
+
+
+def test_image_key_tracks_fixture_mtime_and_entity_sql(
+    spark, sf_dir, entities, tmp_path, monkeypatch
+):
+    """Touching a fixture file or editing ENTITY_SQL gives a new image
+    directory; the same content gives the same one."""
+    import os
+
+    from hadoop_hdfs_spark import entities as ent
+    from hadoop_hdfs_spark import fixtures
+
+    d = _copy_fixture(sf_dir, tmp_path / "sf")
+    seen = []
+    monkeypatch.setattr(fixtures, "build_once", lambda p, _w: seen.append(p) or p)
+    ent.entity_image(spark, d)
+    ent.entity_image(spark, d)
+    os.utime(os.path.join(d, "supplier.parquet"), (1, 1))
+    ent.entity_image(spark, d)
+    monkeypatch.setitem(ENTITY_SQL, "leases", ENTITY_SQL["leases"] + "\n")
+    ent.entity_image(spark, d)
+    assert seen[0] == seen[1]
+    assert len(set(seen)) == 3
+    assert all(os.path.basename(p).startswith("spark_graft_entities_") for p in seen)
+
+
+@pytest.mark.parametrize("scale", ["0.001", "0.01"])
+def test_image_rows_match_the_derivation(spark, sf_dir, scale):
+    """entities.rows, the benchmark's count of every cached entity row,
+    equals the DuckDB derivation's at sf0.001 and sf0.01."""
+    import os
+
+    d = os.path.join(os.path.dirname(sf_dir.rstrip("/")), f"sf{scale}")
+    try:
+        e = load_entities(spark, d)
+        rows = sum(e[name].count() for name in ENTITY_SQL)
+    finally:
+        load_entities(spark, sf_dir)  # the session's views stay on sf_dir
+    con = duckdb_connect(d)
+    counts = [
+        con.execute(oracle_prelude() + f"SELECT COUNT(*) FROM {name}").fetchone()[0]
+        for name in ENTITY_SQL
+    ]
+    con.close()
+    assert rows == sum(counts)
+
+
+def _assert_build_refused(spark, sf_dir, d, monkeypatch, match, arm=None):
+    """Building the image of ``d`` (with ``arm(m)`` applied) raises the
+    named invariant error and publishes nothing."""
+    import glob
+    import os
+
+    from hadoop_hdfs_spark import entities as ent
+
+    try:
+        with monkeypatch.context() as m:
+            seen = _image_dirs(m)
+            if arm is not None:
+                arm(m)
+            with pytest.raises(ent.EntityInvariantError, match=match):
+                ent.entity_image(spark, d)
+    finally:
+        load_entities(spark, sf_dir)  # the build left its views on ``d``
+    (image,) = seen
+    assert not os.path.exists(image)
+    assert glob.glob(f"{glob.escape(image)}.build-*") == []
+
+
+def test_duplicate_replica_key_refuses_the_image(spark, sf_dir, tmp_path, monkeypatch):
+    """17 datanodes make the replica stride 17 land every replica of a
+    block on one node: (block_id, datanode_id) repeats, j2_report_diff's
+    zero-exchange map would double-count, and no image is published."""
+    d = _copy_fixture(sf_dir, tmp_path / "sf17", supplier_rows=17)
+    _assert_build_refused(spark, sf_dir, d, monkeypatch, "not unique")
+
+
+def test_orphan_replica_refuses_the_image(spark, sf_dir, tmp_path, monkeypatch):
+    """A replica whose block is not in blocks breaks j11_read_locality's
+    replica-only scan, and no image is published. The build reads a fresh
+    fixture copy, so no image left by an earlier build can answer it."""
+    orphan = (
+        "\nUNION ALL SELECT CAST(-1 AS BIGINT), 'dn0', 'FINALIZED', false,"
+        " true, true, CAST(0 AS BIGINT)"
+    )
+
+    def arm(m):
+        m.setitem(ENTITY_SQL, "replicas", ENTITY_SQL["replicas"] + orphan)
+
+    d = _copy_fixture(sf_dir, tmp_path / "sf")
+    _assert_build_refused(spark, sf_dir, d, monkeypatch, "not in blocks", arm)

@@ -18,7 +18,7 @@ import sys
 import pytest
 
 from hadoop_hdfs_spark import fixtures
-from hadoop_hdfs_spark.streaming.staging import fixture_fingerprint, staged_dir
+from hadoop_hdfs_spark.fixtures import fixture_fingerprint, staged_dir
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 
@@ -75,10 +75,24 @@ def _stage_payload() -> str:
     return "built"
 
 
-def _caller(name, tmp_path):
+def _caller(name, tmp_path, request):
     """(call, arm) for one caller of build_once: ``call()`` builds and
     returns the directory, ``arm(monkeypatch)`` makes its write raise
-    part-way. The fixture corpora build at a scale factor of their own."""
+    part-way. The fixture corpora build at a scale factor of their own;
+    the entity image builds from a fresh copy of the test fixture."""
+    if name == "entities":
+        from hadoop_hdfs_spark import entities
+
+        from test_entities import _copy_fixture
+
+        spark, sf_dir = (request.getfixturevalue(f) for f in ("spark", "sf_dir"))
+        d = _copy_fixture(sf_dir, tmp_path / "sf")
+        # each build leaves its views on the copy
+        request.addfinalizer(lambda: entities.load_entities(spark, sf_dir))
+        return (
+            lambda: entities.entity_image(spark, d),
+            lambda m: m.setattr(entities, "check_invariants", _boom),
+        )
     if name == "staged_dir":
         d = _mk_fixture(tmp_path, b"v1")
 
@@ -124,13 +138,15 @@ def _caller(name, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "caller", ["staged_dir", "blob", "png", "wav", "gif", "sf1"]
+    "caller", ["staged_dir", "blob", "png", "wav", "gif", "sf1", "entities"]
 )
-def test_torn_or_failed_build_is_never_visible(caller, tmp_path, monkeypatch):
+def test_torn_or_failed_build_is_never_visible(
+    caller, tmp_path, monkeypatch, request
+):
     """Inject each failure build_once guards against, through every
     caller: a write that raises part-way, a rename that fails with no
     complete build in sight, and a torn target left by a crashed build."""
-    call, arm = _caller(caller, tmp_path)
+    call, arm = _caller(caller, tmp_path, request)
     target = call()
     shutil.rmtree(target)
 
