@@ -42,8 +42,9 @@ one sub-directory per entity plus ``_SCHEMAS.json``, the Spark schema of
 every entity and every base table. Every load, the first included, then
 reads the image and the fixture files with those stored schemas, so it
 starts no Spark job (no schema inference, no derivation). The image is
-keyed on the fixture content, on every ``ENTITY_SQL`` statement and on
-the pyspark version; it is checked once, at build, for the data
+keyed on the fixture content (listed at any URI Spark reads), on every
+``ENTITY_SQL`` statement, on the source of the Python that shapes its
+rows and on the pyspark version; it is checked once, at build, for the data
 invariants the queries' fast paths rely on (:func:`check_invariants`).
 The DuckDB oracle still derives from :func:`oracle_prelude`, so the
 image-backed entities are checked against an independent engine.
@@ -51,6 +52,8 @@ image-backed entities are checked against an independent engine.
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import json
 import os
 
@@ -59,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .fixtures import entities_sql_version, staged_dir
+from .fixtures import build_once, entities_sql_version, listed_fingerprint
 
 # "now" for liveness checks: 2024-01-02T00:00:00Z.
 NOW_MS = 1_704_153_600_000
@@ -631,7 +634,6 @@ def check_invariants(e: dict[str, DataFrame]) -> None:
 
 
 _SCHEMAS = "_SCHEMAS.json"
-_IMAGE_VERSION = 1  # the image layout; a bump rebuilds every image
 
 
 def derive_entities(
@@ -661,8 +663,12 @@ def entity_image(spark: SparkSession, sf_dir: str) -> str:
     ``df.write.parquet`` into ``<image>/<entity>``, checks
     :func:`check_invariants` and writes ``_SCHEMAS.json`` (table or
     entity name -> Spark schema); it publishes through
-    ``fixtures.staged_dir``, so a build that raises leaves no image. It
-    leaves the derived frames registered as temp views."""
+    ``fixtures.build_once``, so a build that raises leaves no image. It
+    leaves the derived frames registered as temp views.
+
+    The key is the fixture path and content, listed through Spark's
+    Hadoop FileSystem (``fixtures.listed_fingerprint``), so any URI Spark
+    reads works; :func:`_image_code_version`; and the pyspark version."""
 
     def write(path: str) -> None:
         set_session_confs(spark)  # events.ts is read under nanosAsLong
@@ -682,11 +688,29 @@ def entity_image(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(path, _SCHEMAS), "w") as f:
             json.dump({n: s.jsonValue() for n, s in schemas.items()}, f)
 
-    tag = (
-        f"spark_graft_entities_v{_IMAGE_VERSION}_{entities_sql_version()}"
-        f"_pyspark{pyspark.__version__}"
-    )
-    return staged_dir(sf_dir, tag, write)
+    key = hashlib.md5(
+        f"{sf_dir}|{listed_fingerprint(spark, sf_dir)}|{_image_code_version()}"
+        f"|{pyspark.__version__}".encode()
+    ).hexdigest()[:12]
+    return build_once(f"/tmp/spark_graft_entities_{key}", write)
+
+
+def _image_code_version() -> str:
+    """Digest of what shapes an image's rows and layout: every
+    ``ENTITY_SQL`` statement, the base tables, and the source of the
+    functions that read, derive, check and write them. An edit to any of
+    them builds a new image instead of serving the old entities."""
+    h = hashlib.md5(f"{entities_sql_version()}|{BASE_TABLES}".encode())
+    for fn in (
+        normalize_event_ts,
+        set_session_confs,
+        register_base_tables,
+        derive_entities,
+        check_invariants,
+        entity_image,
+    ):
+        h.update(inspect.getsource(fn).encode())
+    return h.hexdigest()[:8]
 
 
 def load_entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -13,10 +13,11 @@ build-once /tmp directory goes through it: the entity image
 archive (``session``).
 
 An artifact derived from a fixture directory is keyed on its content
-(:func:`fixture_fingerprint`) and, when it reads the entity model, on
-every entity derivation (:func:`entities_sql_version`), so a regenerated
-fixture or an edited entity gets a fresh directory instead of stale
-bytes (ADVICE r3, r6).
+(:func:`fixture_fingerprint` for the local stages,
+:func:`listed_fingerprint` for the entity image, which may read any URI)
+and, when it reads the entity model, on every entity derivation
+(:func:`entities_sql_version`), so a regenerated fixture or an edited
+entity gets a fresh directory instead of stale bytes (ADVICE r3, r6).
 
 The blob corpus backs the content-checksum operators (a9b, s1, s5c). It
 has a FIXED byte volume per scale factor (BYTES_PER_SF * sf across
@@ -111,6 +112,25 @@ def fixture_fingerprint(sf_dir: str) -> str:
             continue
         st = os.stat(os.path.join(sf_dir, name))
         h.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return h.hexdigest()[:12]
+
+
+def listed_fingerprint(spark, sf_dir: str) -> str:
+    """:func:`fixture_fingerprint` through Spark's Hadoop FileSystem:
+    every parquet file's (name, length, modification time in ms), hashed.
+    It keys a directory at any URI Spark reads (a local path,
+    ``file://``, ``hdfs://``)."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(sf_dir)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    files = sorted(
+        (st.getPath().getName(), st.getLen(), st.getModificationTime())
+        for st in fs.listStatus(path)
+    )
+    h = hashlib.md5()
+    for name, size, mtime in files:
+        if name.endswith(".parquet"):
+            h.update(f"{name}:{size}:{mtime};".encode())
     return h.hexdigest()[:12]
 
 

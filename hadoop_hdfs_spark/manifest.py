@@ -171,39 +171,61 @@ def compute_fingerprints(spark) -> dict[str, str]:
     hash. Execution (the result-hash toPandas) simply rebuilds uncached —
     identical values, and cheap at the pinned sf0.001.
 
-    Queries are built over the DERIVED entity model
-    (``entities.derive_entities``), not the parquet image the runtime
-    reads: over the image every entity is a bare scan, so the plan would
-    no longer carry the entity derivations and an ``ENTITY_SQL`` edit
-    that leaves the sf0.001 results unchanged would touch no query.
+    Each query is built twice, once per component:
+
+    - the PLAN over the derived entity model
+      (``entities.derive_entities``): the cache-free rendering of the
+      entity image, whose entities are the materialized results of exactly
+      these derivations. Over the image itself every entity is a bare
+      scan, so the plan would carry no entity derivation and an
+      ``ENTITY_SQL`` edit that leaves the sf0.001 results unchanged would
+      touch no query;
+    - the RESULT over the entity model the runtime reads
+      (``entities.load_entities``, the image), so a query the image path
+      answers differently from its derivation is touched.
     """
     from . import registry
-    from .entities import derive_entities
+    from .entities import derive_entities, load_entities
 
     registry._import_operator_modules()
-    out: dict[str, str] = {}
     app = spark.sparkContext.applicationId
-    e = derive_entities(spark, FINGERPRINT_SF_DIR)
-    for name, q in registry._REGISTRY.items():
-        df = q.fn(e)
-        spark.catalog.clearCache()  # render plans cache-free (see above)
-        # clearCache unpersists but the eager-cache memo still holds the
-        # frames; left in place, a memo HIT returns an unpersisted frame
-        # without re-caching, silently degrading every later query in a
-        # SHARED session (regenerate(spark=...)) to recompute-per-use.
-        # Evicting this app's entries makes the next use rebuild+re-cache.
-        for key in [k for k in registry._CACHED if k[0] == app]:
-            registry._CACHED.pop(key)
-        plan = _normalize_plan(
+
+    def each_query(e, render) -> dict[str, str]:
+        out = {}
+        for name, q in registry._REGISTRY.items():
+            df = q.fn(e)
+            spark.catalog.clearCache()  # render plans cache-free (see above)
+            # clearCache unpersists but the eager-cache memo still holds
+            # the frames; left in place, a memo HIT returns an unpersisted
+            # frame without re-caching, silently degrading every later
+            # query in a SHARED session (regenerate(spark=...)) to
+            # recompute-per-use. Evicting this app's entries makes the next
+            # use rebuild+re-cache.
+            for key in [k for k in registry._CACHED if k[0] == app]:
+                registry._CACHED.pop(key)
+            out[name] = render(df)
+        return out
+
+    plans = each_query(
+        derive_entities(spark, FINGERPRINT_SF_DIR),
+        lambda df: _normalize_plan(
             df._jdf.queryExecution().optimizedPlan().toString()
-        )
-        rhash = _result_hash(df.toPandas())
+        ),
+    )
+    # load_entities re-registers the image-backed views last, so a shared
+    # session is left reading what the runtime reads
+    results = each_query(
+        load_entities(spark, FINGERPRINT_SF_DIR),
+        lambda df: _result_hash(df.toPandas()),
+    )
+    out: dict[str, str] = {}
+    for name, q in registry._REGISTRY.items():
         h = hashlib.sha256()
         h.update((q.oracle or "<no-oracle>").encode())
         h.update(b"\x00")
-        h.update(plan.encode())
+        h.update(plans[name].encode())
         h.update(b"\x00")
-        h.update(rhash.encode())
+        h.update(results[name].encode())
         out[name] = h.hexdigest()
     return out
 

@@ -194,6 +194,28 @@ def w3_balancer_classes(e) -> DataFrame:
     return u.select("datanode_id", "utilization", "avg_utilization", cls.alias("class"))
 
 
+def _node_utilization(e) -> DataFrame:
+    """Every datanode's utilization and the cluster average, on ONE
+    partition of the cached datanodes: the frame is cluster-node-sized,
+    and the average is a window sum over it (no cross join against an
+    aggregate), so the balancer windows and joins above it need no
+    exchange."""
+    whole = Window.partitionBy()
+    return (
+        e["datanodes"]
+        .coalesce(1)
+        .select(
+            "datanode_id",
+            "rack",
+            "capacity",
+            (F.col("dfs_used") * 100.0 / F.col("capacity")).alias("utilization"),
+            (
+                F.sum("dfs_used").over(whole) * 100.0 / F.sum("capacity").over(whole)
+            ).alias("avg_utilization"),
+        )
+    )
+
+
 @register(
     "j4_balancer_pairing",
     oracle="""
@@ -233,20 +255,7 @@ JOIN (
     "without an exchange.",
 )
 def j4_balancer_pairing(e) -> DataFrame:
-    whole = Window.partitionBy()
-    u = (
-        e["datanodes"]
-        .coalesce(1)
-        .select(
-            "datanode_id",
-            "rack",
-            "capacity",
-            (F.col("dfs_used") * 100.0 / F.col("capacity")).alias("utilization"),
-            (
-                F.sum("dfs_used").over(whole) * 100.0 / F.sum("capacity").over(whole)
-            ).alias("avg_utilization"),
-        )
-    )
+    u = _node_utilization(e)
     over = (
         u.filter(F.col("utilization") > F.col("avg_utilization") + 10)
         .withColumn(
@@ -356,20 +365,7 @@ FROM (
     "(j4_balancer_pairing) stays registered for comparison.",
 )
 def j4b_balancer_rack_pairing(e) -> DataFrame:
-    whole = Window.partitionBy()
-    u = (
-        e["datanodes"]
-        .coalesce(1)
-        .select(
-            "datanode_id",
-            "rack",
-            "capacity",
-            (F.col("dfs_used") * 100.0 / F.col("capacity")).alias("utilization"),
-            (
-                F.sum("dfs_used").over(whole) * 100.0 / F.sum("capacity").over(whole)
-            ).alias("avg_utilization"),
-        )
-    )
+    u = _node_utilization(e)
     over = (
         u.filter(F.col("utilization") > F.col("avg_utilization") + 10)
         .select(

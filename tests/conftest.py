@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
 import sys
 
 import pytest
@@ -30,3 +32,37 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def fixture_copy(sf_dir, tmp_path):
+    """Factory: ``fixture_copy(supplier_rows=None)`` copies the test
+    fixture's tables into a new directory under ``tmp_path`` (fresh
+    mtimes, so a fresh entity-image key) and returns its path;
+    ``supplier_rows`` grows the supplier table to that many rows, cycling
+    the real ones under new keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = itertools.count()
+
+    def copy(supplier_rows: int | None = None) -> str:
+        dst = tmp_path / f"sf_copy{next(n)}"
+        os.makedirs(dst)
+        for name in os.listdir(sf_dir):
+            if name.endswith(".parquet"):
+                shutil.copy(os.path.join(sf_dir, name), dst)
+        if supplier_rows is not None:
+            path = os.path.join(dst, "supplier.parquet")
+            table = pq.read_table(path)
+            rows = table.to_pylist()
+            grown = [
+                {**rows[k % len(rows)], "s_suppkey": k}
+                for k in range(supplier_rows)
+            ]
+            pq.write_table(
+                pa.Table.from_pylist(grown, schema=table.schema), path
+            )
+        return str(dst)
+
+    return copy

@@ -311,42 +311,17 @@ def test_token_ops_entity_invariants(spark, sf_dir, entities):
 # --- the entity image -------------------------------------------------------
 
 
-def _copy_fixture(sf_dir, dst, supplier_rows: int | None = None) -> str:
-    """A copy of the fixture tables under ``dst`` (fresh mtimes, so a fresh
-    image key); ``supplier_rows`` grows the supplier table to that many
-    rows, cycling the real ones under new keys."""
-    import os
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(dst)
-    for name in os.listdir(sf_dir):
-        if name.endswith(".parquet"):
-            shutil.copy(os.path.join(sf_dir, name), dst)
-    if supplier_rows is not None:
-        path = os.path.join(dst, "supplier.parquet")
-        table = pq.read_table(path)
-        rows = table.to_pylist()
-        grown = [
-            {**rows[k % len(rows)], "s_suppkey": k} for k in range(supplier_rows)
-        ]
-        pq.write_table(pa.Table.from_pylist(grown, schema=table.schema), path)
-    return str(dst)
-
-
 def _image_dirs(m) -> list[str]:
-    """Record every directory fixtures.build_once is asked for."""
-    from hadoop_hdfs_spark import fixtures
+    """Record every directory entity_image asks build_once for."""
+    from hadoop_hdfs_spark import entities as ent
 
-    real, seen = fixtures.build_once, []
+    real, seen = ent.build_once, []
 
     def recording(d, write):
         seen.append(d)
         return real(d, write)
 
-    m.setattr(fixtures, "build_once", recording)
+    m.setattr(ent, "build_once", recording)
     return seen
 
 
@@ -383,18 +358,17 @@ def test_image_matches_derived_schema(spark, entities):
 
 
 def test_image_key_tracks_fixture_mtime_and_entity_sql(
-    spark, sf_dir, entities, tmp_path, monkeypatch
+    spark, entities, fixture_copy, monkeypatch
 ):
     """Touching a fixture file or editing ENTITY_SQL gives a new image
     directory; the same content gives the same one."""
     import os
 
     from hadoop_hdfs_spark import entities as ent
-    from hadoop_hdfs_spark import fixtures
 
-    d = _copy_fixture(sf_dir, tmp_path / "sf")
+    d = fixture_copy()
     seen = []
-    monkeypatch.setattr(fixtures, "build_once", lambda p, _w: seen.append(p) or p)
+    monkeypatch.setattr(ent, "build_once", lambda p, _w: seen.append(p) or p)
     ent.entity_image(spark, d)
     ent.entity_image(spark, d)
     os.utime(os.path.join(d, "supplier.parquet"), (1, 1))
@@ -404,6 +378,42 @@ def test_image_key_tracks_fixture_mtime_and_entity_sql(
     assert seen[0] == seen[1]
     assert len(set(seen)) == 3
     assert all(os.path.basename(p).startswith("spark_graft_entities_") for p in seen)
+
+
+def _normalize_event_ts_edited(df):
+    """An edited normalize_event_ts: the image key reads its source."""
+    return df
+
+
+def test_image_key_tracks_the_code_that_shapes_rows(
+    spark, entities, fixture_copy, monkeypatch
+):
+    """Editing a Python function that shapes the image's rows (here
+    normalize_event_ts, which events.ts passes through) gives a new image
+    directory, so no load serves entities the old code wrote."""
+    from hadoop_hdfs_spark import entities as ent
+
+    d = fixture_copy()
+    seen = []
+    monkeypatch.setattr(ent, "build_once", lambda p, _w: seen.append(p) or p)
+    ent.entity_image(spark, d)
+    monkeypatch.setattr(ent, "normalize_event_ts", _normalize_event_ts_edited)
+    ent.entity_image(spark, d)
+    assert seen[0] != seen[1]
+
+
+def test_load_entities_reads_a_file_uri(spark, sf_dir, entities):
+    """The image key lists the fixture through Spark's Hadoop FileSystem,
+    so a fixture named by a ``file://`` URI loads the same entities as
+    its plain path."""
+    import os
+
+    try:
+        e = load_entities(spark, "file://" + os.path.abspath(sf_dir))
+        got = {name: e[name].count() for name in ENTITY_SQL}
+    finally:
+        load_entities(spark, sf_dir)  # the session's views stay on sf_dir
+    assert got == {name: entities[name].count() for name in ENTITY_SQL}
 
 
 @pytest.mark.parametrize("scale", ["0.001", "0.01"])
@@ -449,15 +459,17 @@ def _assert_build_refused(spark, sf_dir, d, monkeypatch, match, arm=None):
     assert glob.glob(f"{glob.escape(image)}.build-*") == []
 
 
-def test_duplicate_replica_key_refuses_the_image(spark, sf_dir, tmp_path, monkeypatch):
+def test_duplicate_replica_key_refuses_the_image(
+    spark, sf_dir, fixture_copy, monkeypatch
+):
     """17 datanodes make the replica stride 17 land every replica of a
     block on one node: (block_id, datanode_id) repeats, j2_report_diff's
     zero-exchange map would double-count, and no image is published."""
-    d = _copy_fixture(sf_dir, tmp_path / "sf17", supplier_rows=17)
+    d = fixture_copy(supplier_rows=17)
     _assert_build_refused(spark, sf_dir, d, monkeypatch, "not unique")
 
 
-def test_orphan_replica_refuses_the_image(spark, sf_dir, tmp_path, monkeypatch):
+def test_orphan_replica_refuses_the_image(spark, sf_dir, fixture_copy, monkeypatch):
     """A replica whose block is not in blocks breaks j11_read_locality's
     replica-only scan, and no image is published. The build reads a fresh
     fixture copy, so no image left by an earlier build can answer it."""
@@ -469,5 +481,5 @@ def test_orphan_replica_refuses_the_image(spark, sf_dir, tmp_path, monkeypatch):
     def arm(m):
         m.setitem(ENTITY_SQL, "replicas", ENTITY_SQL["replicas"] + orphan)
 
-    d = _copy_fixture(sf_dir, tmp_path / "sf")
+    d = fixture_copy()
     _assert_build_refused(spark, sf_dir, d, monkeypatch, "not in blocks", arm)

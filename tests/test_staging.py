@@ -81,17 +81,18 @@ def _caller(name, tmp_path, request):
     part-way. The fixture corpora build at a scale factor of their own;
     the entity image builds from a fresh copy of the test fixture."""
     if name == "entities":
+        from pyspark.sql import DataFrameWriter
+
         from hadoop_hdfs_spark import entities
 
-        from test_entities import _copy_fixture
-
         spark, sf_dir = (request.getfixturevalue(f) for f in ("spark", "sf_dir"))
-        d = _copy_fixture(sf_dir, tmp_path / "sf")
+        d = request.getfixturevalue("fixture_copy")()
         # each build leaves its views on the copy
         request.addfinalizer(lambda: entities.load_entities(spark, sf_dir))
         return (
             lambda: entities.entity_image(spark, d),
-            lambda m: m.setattr(entities, "check_invariants", _boom),
+            # the entity writes raise; check_invariants is part of the key
+            lambda m: m.setattr(DataFrameWriter, "parquet", _boom),
         )
     if name == "staged_dir":
         d = _mk_fixture(tmp_path, b"v1")
