@@ -43,6 +43,14 @@ If it holds a real file, or another directory may join the class path
 placed before any ``extraJavaOptions``), no CDS option is passed and the
 environment is left alone: the JVM launches as it would without archives.
 Delete the directory and any ``.rec-*`` files to drop the archive.
+
+Python workers fork from :mod:`hadoop_hdfs_spark.pydaemon`
+(``spark.python.daemon.module``), which drops Spark's ``pyspark.zip``,
+py4j zip and ``spark-core`` jar from the workers' ``sys.path`` when the
+installed pyspark of the same version imports without them, so workers
+run the byte-compiled package and no task re-reads an archive. Executors
+must import the package, as the UDF closures already require. A caller's
+``spark.python.daemon.module`` (``SPARK_GRAFT_EXTRA_CONF``) wins.
 """
 
 from __future__ import annotations
@@ -126,6 +134,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that imports the installed,
+        # byte-compiled pyspark instead of Spark's zip (pydaemon.py)
+        .config("spark.python.daemon.module", "hadoop_hdfs_spark.pydaemon")
     )
     for k, v in overrides.items():
         builder = builder.config(k, v)

@@ -4,6 +4,7 @@ import itertools
 import os
 import shutil
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -27,6 +28,43 @@ def spark():
     s = get_spark("hadoop-hdfs-spark-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+class _Builder:
+    """Records the options get_spark would launch the JVM with."""
+
+    def __init__(self):
+        self.options = {}
+
+    def appName(self, name):
+        return self.config("spark.app.name", name)
+
+    def master(self, master):
+        return self.config("spark.master", master)
+
+    def config(self, key, value):
+        self.options[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+@pytest.fixture
+def launch_options(monkeypatch):
+    """Factory: ``launch_options(cds=True)`` runs ``get_spark`` against a
+    recording builder and returns the options it would start the JVM
+    with; ``cds=False`` leaves the class-data-sharing archive out."""
+    from hadoop_hdfs_spark import session
+
+    def launch(cds: bool = True) -> dict:
+        builder = _Builder()
+        monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
+        monkeypatch.setattr(session, "_launches_jvm", lambda: cds)
+        session.get_spark("cds", cpus=2)
+        return builder.options
+
+    return launch
 
 
 @pytest.fixture(scope="session")

@@ -131,42 +131,14 @@ def test_changed_key_records_a_new_archive(box, monkeypatch):
     assert os.path.exists(os.path.join(old, session._CDS_ARCHIVE))
 
 
-class _Builder:
-    """Records the options get_spark would launch the JVM with."""
-
-    def __init__(self):
-        self.options = {}
-
-    def appName(self, name):
-        return self.config("spark.app.name", name)
-
-    def master(self, master):
-        return self.config("spark.master", master)
-
-    def config(self, key, value):
-        self.options[key] = value
-        return self
-
-    def getOrCreate(self):
-        return self
-
-
-def _launch_options(monkeypatch) -> dict:
-    builder = _Builder()
-    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
-    monkeypatch.setattr(session, "_launches_jvm", lambda: True)
-    session.get_spark("cds", cpus=2)
-    return builder.options
-
-
-def test_conf_dir_with_a_real_file_launches_as_without_archives(box, monkeypatch, tmp_path):
+def test_conf_dir_with_a_real_file_launches_as_without_archives(box, monkeypatch, tmp_path, launch_options):
     monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
     monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
     stem = _stem("8g")
     os.makedirs(stem)
     Path(stem, session._CDS_ARCHIVE).write_bytes(b"archive")
     Path(stem, MARKER).touch()
-    with_archive = _launch_options(monkeypatch)
+    with_archive = launch_options()
     assert with_archive.pop("spark.driver.defaultJavaOptions").startswith(
         f"-XX:SharedArchiveFile={stem}/")
     conf = tmp_path / "conf"
@@ -174,7 +146,7 @@ def test_conf_dir_with_a_real_file_launches_as_without_archives(box, monkeypatch
     (conf / "log4j2.properties.template").write_text("")
     (conf / "spark-defaults.conf").write_text("spark.eventLog.enabled false\n")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    without = _launch_options(monkeypatch)
+    without = launch_options()
     assert list(without.items()) == list(with_archive.items())
     assert os.environ["SPARK_CONF_DIR"] == str(conf)
     assert session._cds_options("8g") is None
