@@ -57,6 +57,24 @@ few hundred up the extra tasks pay for themselves (t21 at sf0.1 takes
 puts the switch between the two. The JVM-state gates (t14, t17-t20) take
 1-5 s and t2c 8-17 s at every count; the applyInPandasWithState gates
 above carry the total.
+
+Again with the Python workers forked from :mod:`hadoop_hdfs_spark.pydaemon`
+(no task re-reads Spark's archives), same box, one process per scale
+factor after one warm-up call of each gate, passes in the order 4, 2, 1,
+rule:
+
+    gate  sf       rows  n      1      2      4   rule
+    t21   0.001      34  1    3.8    3.3    4.4    3.4
+    t22   0.001       5  1    4.3    4.6    5.8    4.1
+    t23   0.001      60  1    2.1    2.2    2.9    2.2
+    t26   0.001       8  1    4.6    5.1    7.1    4.7
+    t21   0.01      313  3   11.1    7.5    6.8    6.2
+    t22   0.01       45  1    4.2    4.6    5.3    4.4
+    t23   0.01      197  2    7.2    6.3    7.4    5.6
+    t26   0.01      107  1    6.4    6.5    8.0    5.9
+
+The charge per partition fell with the per-task worker cost, and the rule
+still picks the fastest count or one within a pass's noise of it.
 """
 
 from __future__ import annotations
