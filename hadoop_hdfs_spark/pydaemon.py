@@ -7,14 +7,15 @@ byte-compiled pyspark instead of Spark's source archives.
 ``PythonUtils.sparkPythonPath`` in front of ``PYTHONPATH``:
 ``$SPARK_HOME/python/lib/pyspark.zip`` (source only, no ``.pyc``), the
 ``py4j-*-src.zip`` and the ``spark-core`` jar (no Python at all). With those
-on ``sys.path`` two costs follow:
+on ``sys.path`` two costs follow (Python 3.11, a 4-core box):
 
-- the daemon compiles every pyspark module it imports from source, about
-  1.4-1.7 s against 0.35-0.5 s from the installed package;
+- the daemon compiles every pyspark module it imports from source:
+  ``import pyspark.worker`` takes 0.9-1.7 s from the zip against
+  0.2-0.5 s from the installed package;
 - every Python task calls ``importlib.invalidate_caches()``
-  (``pyspark/worker_util.py``), and on Python 3.11 that makes each
-  zipimporter read its archive's directory again: about 145 ms per task
-  with the three entries cached, 28 ms for the jar alone.
+  (``pyspark/worker_util.py``), which makes each zipimporter read its
+  archive's directory again: 115-145 ms per task with the three entries
+  cached, 25-40 ms for the jar alone.
 
 The daemon drops those three entries from ``sys.path`` and their finders
 from ``sys.path_importer_cache`` when the installed ``pyspark`` and ``py4j``
@@ -31,6 +32,7 @@ import fnmatch
 import os
 import re
 import sys
+import zipfile
 from importlib.machinery import PathFinder
 
 # the basenames of the entries PythonUtils.sparkPythonPath adds
@@ -52,8 +54,6 @@ def _version(source: bytes) -> bytes | None:
 
 
 def _zip_version(archive: str) -> bytes | None:
-    import zipfile
-
     try:
         with zipfile.ZipFile(archive) as z:
             return _version(z.read("pyspark/version.py"))
