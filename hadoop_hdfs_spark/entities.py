@@ -718,12 +718,15 @@ def load_entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     the entity image (:func:`entity_image`, built on first use).
 
     The base tables and the entities are read with the image's stored
-    schemas, so on a built image this starts no Spark job. Every entity
-    is ``.cache()``d: the entities are the *metadata* model
-    (namespace/node-scale, not data-scale), the hot dimensions every
-    query joins — the FSImage-in-RAM analog. The returned dict also
-    carries the base fixture tables (documents, embeddings, ...) so
-    pipeline operators can reach them, and ``__sf_dir__``.
+    schemas, so on a built image this starts no Spark job. The image is
+    read in place, the way the OfflineImageViewer streams an fsimage
+    (ImageLoaderCurrent.java:147-178) instead of loading it into RAM:
+    each query scans only the entity columns it reads, and only the
+    operator pins (``registry.eager_cache_thunk``) are held in memory. A
+    session therefore reads the image for its whole lifetime. The
+    returned dict also carries the base fixture tables (documents,
+    embeddings, ...) so pipeline operators can reach them, and
+    ``__sf_dir__``.
     """
     image = entity_image(spark, sf_dir)
     with open(os.path.join(image, _SCHEMAS)) as f:
@@ -731,11 +734,7 @@ def load_entities(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out = dict(register_base_tables(spark, sf_dir, schemas))
     out["__sf_dir__"] = sf_dir
     for name in ENTITY_SQL:
-        df = (
-            spark.read.schema(schemas[name])
-            .parquet(os.path.join(image, name))
-            .cache()
-        )
+        df = spark.read.schema(schemas[name]).parquet(os.path.join(image, name))
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

@@ -45,7 +45,7 @@ def _block_replica_counts(e) -> DataFrame:
     registered callers' warm paths (f5, j5, a3, u3, w6, w6b, t6 — guide
     §2.4: two operations keyed the same way share one exchange; here the
     sharing is across queries). Frame size is block-population-scale
-    (10 narrow columns), the same class as the pinned entity caches.
+    (12 narrow columns).
 
     ``min_live_source`` (min non-corrupt replica's datanode, NULL when
     none) rides along for t6_replication_work's copy-source choice, and
@@ -67,8 +67,16 @@ def _block_replica_counts(e) -> DataFrame:
     the oracles' inner replicas|><|datanodes derivations. Every consumer
     reads this one pin since r12 (a10/a18's r11 rotation-budget copy of
     the bare rollup is folded back in).
+
+    ``rack_lo``/``rack_hi`` (min/max rack of the non-corrupt replicas on
+    NORMAL nodes, NULL when none) are the W2 queue's rack-deficit test:
+    with ``live_normal`` and ``decom_replicas`` they are every fold the
+    queue needs, so it is this pin joined to ``inodes``.
     """
     blocks, replicas, datanodes = e["blocks"], e["replicas"], e["datanodes"]
+    normal_rack = F.when(
+        ~F.col("is_corrupt") & (F.col("admin_state") == "NORMAL"), F.col("rack")
+    )
     return eager_cache_thunk(
         e,
         "block_repl",
@@ -102,6 +110,8 @@ def _block_replica_counts(e) -> DataFrame:
                     1,
                 ).otherwise(0)
             ).alias("decom_replicas"),
+            F.min(normal_rack).alias("rack_lo"),
+            F.max(normal_rack).alias("rack_hi"),
         ),
     )
 
@@ -548,45 +558,19 @@ def w2_replication_priority(e) -> DataFrame:
 
 
 def _build_w2_queue(e) -> DataFrame:
-    blocks, replicas, datanodes, inodes = (
-        e["blocks"],
-        e["replicas"],
-        e["datanodes"],
-        e["inodes"],
-    )
-    counts = (
-        blocks.join(replicas, "block_id", "left")
-        .join(
-            F.broadcast(datanodes.select("datanode_id", "admin_state", "rack")),
-            "datanode_id",
-            "left",
-        )
-        .groupBy("block_id", "file_id")
-        .agg(
-            F.sum(
-                F.when(
-                    ~F.col("is_corrupt") & (F.col("admin_state") == "NORMAL"), 1
-                ).otherwise(0)
-            ).alias("live"),
-            F.sum(
-                F.when(~F.col("is_corrupt") & (F.col("admin_state") != "NORMAL"), 1).otherwise(0)
-            ).alias("decom_live"),
-            F.min(
-                F.when(
-                    ~F.col("is_corrupt") & (F.col("admin_state") == "NORMAL"),
-                    F.col("rack"),
-                )
-            ).alias("rack_lo"),
-            F.max(
-                F.when(
-                    ~F.col("is_corrupt") & (F.col("admin_state") == "NORMAL"),
-                    F.col("rack"),
-                )
-            ).alias("rack_hi"),
-        )
+    # every fold the queue needs is a column of the blocksMap pin: live is
+    # countNodes' live (NORMAL nodes only), decom_live its decommissioning
+    # count, rack_lo/rack_hi the NORMAL-replica rack range
+    counts = _block_replica_counts(e).select(
+        "block_id",
+        "file_id",
+        F.col("live_normal").alias("live"),
+        F.col("decom_replicas").alias("decom_live"),
+        "rack_lo",
+        "rack_hi",
     )
     j = counts.join(
-        inodes.select(F.col("id").alias("file_id"), "replication"), "file_id"
+        e["inodes"].select(F.col("id").alias("file_id"), "replication"), "file_id"
     ).filter(
         (F.col("live") < F.col("replication"))
         | (
@@ -603,18 +587,17 @@ def _build_w2_queue(e) -> DataFrame:
         .when(F.col("live") * 3 < F.col("replication"), 1)
         .otherwise(2)
     )
-    out = j.select(
+    # The reference keeps this queue as a maintained in-memory structure
+    # (UnderReplicatedBlocks inside BlockManager), not a per-call scan;
+    # caching the (block-count-bounded, metadata-scale) queue is the
+    # faithful analog and lets T6's scheduler drain it without re-running
+    # the inodes join.
+    return j.select(
         "block_id",
         "live",
         F.col("replication").alias("expected"),
         priority.cast("int").alias("priority"),
     )
-    # The reference keeps this queue as a maintained in-memory structure
-    # (UnderReplicatedBlocks inside BlockManager), not a per-call scan;
-    # caching the (block-count-bounded, metadata-scale) queue is the
-    # faithful analog and lets T6's scheduler drain it without re-running
-    # the three-way join.
-    return out
 
 
 # U3's excess picks as standalone SQL — reused by m2_invalidate_sets'

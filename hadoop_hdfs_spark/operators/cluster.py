@@ -1116,17 +1116,18 @@ WHERE rk <= deficit
     "scheduled block; DatanodeDescriptor exclusion + rack spread): for "
     "every under-replicated block in the per-round work list, rank "
     "candidate nodes — NORMAL admin state, live heartbeat, NOT already "
-    "holding a replica (anti-join) — preferring racks that hold NO "
-    "existing replica (the new-rack-first spread rule), then remaining "
+    "holding a replica (holder-set exclusion) — preferring racks that "
+    "hold NO existing replica (the new-rack-first spread rule), then remaining "
     "space, and take exactly the replication deficit. Documented "
     "simplification: the reference's chooseTarget walks a network "
     "topology with local-node preference; the declarative rank keeps the "
     "same exclusion + rack-spread semantics as a per-block window over a "
     "node-count-sized candidate frame. Priority-3 (rack-deficit) items "
     "carry no replica deficit and are excluded — they need a move, not a "
-    "copy (the J4 pairing path). Plan shape: work-queue x broadcast "
-    "datanodes dim, two broadcast anti/left joins, one window per block "
-    "partition — no frame scales beyond queue x nodes.",
+    "copy (the J4 pairing path). Plan shape: pinned round state (queue "
+    "with per-block holder node and rack sets) x broadcast datanodes dim, "
+    "exclusion and rack spread as set-membership tests, one window per "
+    "block partition — no frame scales beyond queue x nodes.",
 )
 def j10_replication_targets(e) -> DataFrame:
     from .admin import t6_replication_work
@@ -1134,87 +1135,60 @@ def j10_replication_targets(e) -> DataFrame:
 
     from ..registry import eager_cache_thunk
 
-    # the per-round work queue is small (2/source cap) and already the
-    # product of the full w2 window chain — pin it once per session/SF.
-    # THUNK form throughout (r11): eager_cache(e, tag, expr) evaluates
-    # expr — the whole scheduler tree, hundreds of py4j calls — before
-    # the memo is even consulted, so warm invocations paid full
-    # construction for frames they never rebuild.
-    work = eager_cache_thunk(
-        e,
-        "t6_work_blocks",
-        lambda: t6_replication_work(e).select("block_id").distinct(),
-    )
-    r, d = e["replicas"], e["datanodes"]
-    # deficit from the CACHED W2 queue (same live/expected definitions the
-    # oracle's need-CTE recomputes). The deficit-annotated queue IS the
-    # reference's per-scheduling-round work list (computeReplicationWork
-    # builds it once per round; target choice consumes it), so it is
-    # pinned per session/SF too — re-deriving the w2 rollup + join per
-    # invocation paid ~0.7 s/run at sf0.1 for a queue-sized frame.
-    need = eager_cache_thunk(
-        e,
-        "j10_need",
-        lambda: work.join(
-            w2_replication_priority(e).select("block_id", "live", "expected"),
-            "block_id",
+    d = e["datanodes"]
+
+    # The round state, pinned once per session/SF: every block of the
+    # per-round work list (2/source cap) with its replication deficit and
+    # its holders, as computeReplicationWork builds it once per round and
+    # chooseTarget reads its exclusion lists straight off the blocksMap.
+    # The deficit comes from the pinned W2 queue (the live/expected
+    # definitions the oracle's need-CTE recomputes). The holders are the
+    # non-corrupt replicas of the queued blocks (a broadcast join restricts
+    # the replica scan to the queue first) folded per block into two sets:
+    # their nodes and the racks of the nodes the dimension knows. The join
+    # is inner: t6 schedules only blocks with a non-corrupt copy source, so
+    # every queued block has a holder. THUNK form: on a memo hit the
+    # scheduler tree (hundreds of py4j calls) is not built at all.
+    def round_state() -> DataFrame:
+        need = (
+            t6_replication_work(e)
+            .select("block_id")
+            .distinct()
+            .join(w2_replication_priority(e).select("block_id", "live", "expected"), "block_id")
+            .filter(F.col("expected") > F.col("live"))
+            .select(
+                "block_id",
+                (F.col("expected") - F.col("live")).cast("long").alias("deficit"),
+            )
         )
-        .filter(F.col("expected") > F.col("live"))
-        .select(
-            "block_id",
-            (F.col("expected") - F.col("live")).cast("long").alias("deficit"),
-        ),
-    )
-    # holders restricted to the work queue's blocks FIRST (broadcast
-    # semi-join): the exclusion anti-join then compares the candidate
-    # frame against a queue-sized holder set, not the full replica table —
-    # Catalyst can't infer this reduction because the anti-join alone
-    # doesn't reveal that only queued blocks' holders matter. Both holder
-    # frames are queue-sized per-round state (the reference's chooseTarget
-    # reads exclusion lists straight off the in-memory blocksMap at round
-    # time), so they pin per session/SF like the queue — otherwise every
-    # invocation re-scans the full replica table twice (anti-join leg +
-    # rack leg) to rebuild a few-thousand-row set.
-    holder_nodes = eager_cache_thunk(
-        e,
-        "j10_holder_nodes",
-        lambda: r.filter(~F.col("is_corrupt"))
-        .join(F.broadcast(need.select("block_id")), "block_id", "left_semi")
-        .select("block_id", "datanode_id"),
-    )
-    # queue-sized like its source frame, and its distinct costs an
-    # exchange per pass — pinned with the rest of the round state (r11)
-    holder_racks = eager_cache_thunk(
-        e,
-        "j10_holder_racks",
-        lambda: holder_nodes.join(
-            F.broadcast(d.select("datanode_id", "rack")), "datanode_id"
+        return (
+            e["replicas"]
+            .filter(~F.col("is_corrupt"))
+            .join(F.broadcast(need), "block_id")
+            .join(F.broadcast(d.select("datanode_id", "rack")), "datanode_id", "left")
+            .groupBy("block_id", "deficit")
+            .agg(
+                F.collect_set("datanode_id").alias("holder_nodes"),
+                F.collect_set("rack").alias("holder_racks"),
+            )
         )
-        .select("block_id", "rack")
-        .distinct(),
-    )
+
     alive = d.filter(
         (F.col("admin_state") == "NORMAL")
         & (F.lit(NOW_MS) - F.col("last_heartbeat_ms") <= HEARTBEAT_EXPIRY_MS)
     ).select("datanode_id", "rack", "remaining")
-    hr = holder_racks.select(
-        F.col("block_id").alias("hr_block_id"), F.col("rack").alias("h_rack")
-    )
+    # candidates: every live NORMAL node not already holding the block,
+    # flagged when its rack already holds one
     cand = (
-        need.crossJoin(F.broadcast(alive))
-        .join(holder_nodes, ["block_id", "datanode_id"], "left_anti")
-        .join(
-            hr,
-            (F.col("block_id") == F.col("hr_block_id"))
-            & (F.col("rack") == F.col("h_rack")),
-            "left",
-        )
+        eager_cache_thunk(e, "j10_round", round_state)
+        .crossJoin(F.broadcast(alive))
+        .filter(~F.array_contains("holder_nodes", F.col("datanode_id")))
         .select(
             "block_id",
             "deficit",
             "datanode_id",
             "remaining",
-            F.when(F.col("h_rack").isNotNull(), 1).otherwise(0).alias("rack_collision"),
+            F.array_contains("holder_racks", F.col("rack")).cast("int").alias("rack_collision"),
         )
     )
     w = Window.partitionBy("block_id").orderBy(

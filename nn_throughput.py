@@ -48,7 +48,7 @@ def main() -> None:
     # SECOND set of entity frames
     e = registry._entities(spark, sf_dir)
     inodes = e["inodes"]
-    inodes.count()  # warm the cached entity (fsimage load, untimed)
+    inodes.count()  # warm the JVM's parquet read of the image, untimed
 
     ops: dict[str, float] = {}
 

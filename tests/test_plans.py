@@ -191,6 +191,23 @@ def test_capped_jaccard_broadcasts_hot_shingle_anti_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def test_j11_scans_only_the_replica_columns_it_reads(spark, sf_dir):
+    # the entity image is read in place: j11's replica leg is a parquet
+    # scan of the image's replicas that reads only the three columns j11
+    # uses, not an in-memory copy of the whole entity
+    import re
+
+    plan = _plan(spark, sf_dir, "j11_read_locality")
+    (scan,) = [
+        node for node in plan.split("\n\n")
+        if re.match(r"\(\d+\) Scan parquet", node.strip()) and "/replicas]" in node
+    ]
+    read_schema = next(line for line in scan.splitlines() if "ReadSchema" in line)
+    assert set(re.findall(r"(\w+):", read_schema.split("struct<", 1)[1])) == {
+        "block_id", "datanode_id", "is_corrupt"
+    }
+
+
 def test_t7_pending_filter_pushed_to_scan(spark, sf_dir):
     # the timeout predicate is a map-side filter over the pending table —
     # no join, no window, one stage before any exchange

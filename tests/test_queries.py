@@ -124,8 +124,10 @@ def test_w2_decommission_only_block_is_priority_zero(spark):
     from hadoop_hdfs_spark.operators.blocks import w2_replication_priority
 
     e = {
+        # seq/num_bytes: the blocksMap pin the queue reads groups by them
         "blocks": spark.createDataFrame(
-            [(1, 100), (2, 100), (3, 100)], "block_id LONG, file_id LONG"
+            [(1, 100, 0, 1), (2, 100, 1, 1), (3, 100, 2, 1)],
+            "block_id LONG, file_id LONG, seq INT, num_bytes LONG",
         ),
         "replicas": spark.createDataFrame(
             # blk 1: all copies on draining nodes; blk 2: healthy x3;

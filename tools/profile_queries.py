@@ -61,11 +61,7 @@ def main() -> None:
     if args.only:
         names = [n for n in names if n in set(args.only.split(","))]
     spark.range(1).count()
-    from pyspark.sql import DataFrame as _DF
-
-    for ent in registry._entities(spark, _sf_dir).values():
-        if isinstance(ent, _DF) and ent.is_cached:
-            ent.count()
+    registry._entities(spark, _sf_dir)  # the entity image, built on first use
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     plans_dir = os.path.join(repo, "plans", args.plans_round)
